@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-run bench: one JSON line with per-query wall seconds on
   * SPARK_GRAFT_SF_DIR.
@@ -29,24 +31,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // coalesce tiny post-shuffle partitions to the advisory size
-      // instead of preserving parallelism — fewer task launches per
-      // stage at small SF, and the production-recommended setting at
-      // scale (partition sizing should win over raw task count)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // the suite compiles ~2k distinct codegen units; the default
-      // 100-entry cache would evict the warmup's classes before the
-      // timed run touches them, moving Janino compiles INTO windows
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
 
     // Deterministic block-manager scrub between queries. Cached
     // DataFrames are dropped via the cache manager; localCheckpoint
@@ -63,7 +48,7 @@ object Bench {
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     }
     // GC between windows: on a count (drives the ContextCleaner over
     // broadcast/shuffle state) or on a heap watermark (so a full GC
@@ -75,6 +60,18 @@ object Bench {
       val rt = Runtime.getRuntime
       val used = rt.totalMemory - rt.freeMemory
       if (sinceGc >= 16 || used > (3L << 30)) { sinceGc = 0; System.gc() }
+    }
+    type Query = (SparkSession, String) => DataFrame
+    // one untimed run, then the between-windows hygiene; failures are
+    // ignored here and re-surface in the query's own timed run
+    def untimedRun(fn: Query, dir: String): Unit = {
+      try fn(spark, dir).count() catch { case NonFatal(_) => () }
+      scrub(); maybeGc()
+    }
+    // failures are flagged, never silently timed as a plausible duration
+    def timedRun(name: String, fn: Query): (Boolean, Double) = Harness.timed {
+      try { fn(spark, sfDir).count(); true }
+      catch { case NonFatal(e) => System.err.println(s"[bench] $name failed: $e"); false }
     }
 
     // JVM-aging diagnostics (stderr only, outside timed windows): heap,
@@ -148,7 +145,7 @@ object Bench {
     // plausible-looking positive duration
     val layoutPrepOk =
       try { SparkEntry.prepareLayouts(spark, sfDir); true }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] layout prep failed: $e"); false }
 
     val warmupDir = "/root/testdata/sf0.001"
@@ -164,8 +161,7 @@ object Bench {
     // the queries BENCH_r11 showed at 2.0-2.5 s on the driver host
     // while their closing-run times sat <=2.0 s — the pure cold-start
     // signature (q_bradley_terry 2.49 driver vs 0.85 closing). One
-    // throwaway run each at sfDir; untimed by construction; failures
-    // are ignored here and re-surface in the query's own timed run.
+    // throwaway run each at sfDir; untimed by construction.
     // CAVEAT (round-11 advice #5): these runs also warm the OS page
     // cache for the bench input files, so the pre-JITted queries'
     // reported times measure warm-I/O performance unlike the rest of
@@ -175,24 +171,19 @@ object Bench {
       "q_bradley_terry", "q_weighted_quartiles", "q_quantile_normalize",
       "q_minhash_accuracy", "q_assoc_rules", "q_partition_prune",
       "q_weighted_median", "q_novelty", "q_dedup_keep_best")
-    // SPARK_GRAFT_PREJIT=off disables the pass entirely — the A/B knob
-    // for the drift hypothesis "the pre-JIT pass itself dirties the JVM
-    // the driver then times" (round-12 verdict #2/#3). Round-13: the
+    val prejitRepsFloorJustified = 2
+    val prejitRepsOther = 1
+    // The pass stays on: its A/B (round 14) measured 219.7 s with it
+    // vs 272.0 s without (bench_closing*.json). Round-13: the
     // iterative FloorJustified heavies run TWICE — TimeQ shows a single
     // target-SF run leaves them far from C2 steady state (q_sssp
     // rep1 10.97 s -> rep5 3.77 s on a quiet host; BENCH_r12 timed it
     // at 6.28 s right after a single warm run).
-    if (!sys.env.get("SPARK_GRAFT_PREJIT").contains("off")) {
-      preJit.foreach { n =>
-        SparkEntry.queries.get(n).foreach { fn =>
-          val reps = if (Explain.FloorJustified(n)) 2 else 1
-          var r = 0
-          while (r < reps) {
-            try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-            scrub(); maybeGc()
-            r += 1
-          }
-        }
+    preJit.foreach { n =>
+      SparkEntry.queries.get(n).foreach { fn =>
+        val reps =
+          if (Explain.FloorJustified(n)) prejitRepsFloorJustified else prejitRepsOther
+        (1 to reps).foreach(_ => untimedRun(fn, sfDir))
       }
     }
 
@@ -203,17 +194,8 @@ object Bench {
       qIdx += 1
       if (qIdx % 25 == 0) jvmDiag(s"q$qIdx")
       // warm THIS query's plan/codegen/JIT right before timing it
-      if (haveWarmup) {
-        try { fn(spark, warmupDir).count() } catch { case _: Throwable => () }
-        scrub(); maybeGc()
-      }
-      def timedRun(): (Boolean, Double) = {
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-          catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); false }
-        (ok, (System.nanoTime() - t0) / 1e9)
-      }
-      val (ok1, t1) = timedRun()
+      if (haveWarmup) untimedRun(fn, warmupDir)
+      val (ok1, t1) = timedRun(name, fn)
       // failures are flagged with a negative duration, never silently
       // folded into the total as a plausible time
       val secs =
@@ -221,7 +203,7 @@ object Bench {
         else if (t1 <= RerunSecs) t1
         else { // spike guard: min of two back-to-back runs
           scrub(); maybeGc()
-          val (ok2, t2) = timedRun()
+          val (ok2, t2) = timedRun(name, fn)
           val m2 = if (ok2) math.min(t1, t2) else t1
           // a host-level stall (long GC pause, OS contention) can span
           // BOTH back-to-back runs, so min-of-2 occasionally reports a
@@ -236,7 +218,7 @@ object Bench {
           if (m2 <= Explain.HardBudgetSecs || Explain.FloorJustified(name)) m2
           else {
             scrub(); maybeGc()
-            val (ok3, t3) = timedRun()
+            val (ok3, t3) = timedRun(name, fn)
             if (ok3) math.min(m2, t3) else m2
           }
         }
@@ -256,14 +238,8 @@ object Bench {
     val finalResults = results.map { case (name, secs) =>
       if (secs > Explain.HardBudgetSecs && !Explain.FloorJustified(name)) {
         val fn = SparkEntry.queries(name)
-        if (haveWarmup) {
-          try { fn(spark, warmupDir).count() } catch { case _: Throwable => () }
-          scrub(); maybeGc()
-        }
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-        val t = (System.nanoTime() - t0) / 1e9
+        if (haveWarmup) untimedRun(fn, warmupDir)
+        val (ok, t) = timedRun(name, fn)
         scrub(); maybeGc()
         lateRechecked += name
         name -> (if (ok) math.min(secs, t) else secs)
@@ -277,12 +253,14 @@ object Bench {
     // Self-describing measurement protocol (round-14, per the round-13
     // verdict): the next "did the harness change?" question must be
     // answerable from the artifact alone. Additive field; the env
-    // contract and every existing field stay byte-compatible.
-    val prejitOn = !sys.env.get("SPARK_GRAFT_PREJIT").contains("off")
+    // contract and every existing field stay byte-compatible. The
+    // warmup SF and pre-JIT reps are the values this run used.
     val protocolField =
-      s""""protocol":{"timed_action":"count","warmup_sf":"sf0.001",""" +
-        s""""prejit":${prejitOn},"prejit_reps_floor_justified":2,""" +
-        s""""prejit_reps_other":1,"rerun_secs":$RerunSecs,""" +
+      s""""protocol":{"timed_action":"count",""" +
+        s""""warmup_sf":"${new java.io.File(warmupDir).getName}",""" +
+        s""""prejit":${preJit.nonEmpty},""" +
+        s""""prejit_reps_floor_justified":$prejitRepsFloorJustified,""" +
+        s""""prejit_reps_other":$prejitRepsOther,"rerun_secs":$RerunSecs,""" +
         s""""hard_budget_secs":${Explain.HardBudgetSecs},""" +
         s""""rerun_rule":"min-of-2 past rerun_secs, min-of-3 past hard budget unless floor-justified",""" +
         s""""late_recheck":"one end-of-suite warm+timed min for non-exempt rows past hard budget"},"""
@@ -315,7 +293,7 @@ object Bench {
         java.nio.file.Files.write(java.nio.file.Paths.get(out),
           fullLine.getBytes("UTF-8"))
       }
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // The harness keeps only the last ~2000 chars of output and parses
     // the JSON line from that tail — with hundreds of queries the full
     // map no longer fits, so the FINAL line is a compact summary

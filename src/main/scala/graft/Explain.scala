@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dev tool: dump formatted physical plans for selected queries so plan
   * quality (pushdown, pruning, broadcast, codegen spans) is reviewable.
@@ -197,13 +197,7 @@ object Explain {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     if (args.headOption.contains("--audit")) {
       // one-line plan-quality audit per query: the scale signals a
@@ -256,47 +250,14 @@ object Explain {
       // histogram drill-downs). For those rows the static plan columns
       // describe only the final emit — the real work is in the counted
       // jobs — so the audit marks them drv:<n>j instead of letting a
-      // near-empty plan read as "this query does nothing". Listener
-      // delivery is async; the short post-construction sleep lets the
-      // bus drain before the delta is read.
-      val jobCount = new java.util.concurrent.atomic.AtomicInteger()
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          // every spark.read.parquet fires a schema-inference job
-          // (sole stage named "parquet at …") — reading a table is not
-          // driver-phase COMPUTATION, so only genuine actions (collect,
-          // head, treeAggregate, eager localCheckpoint, …) count. The
-          // call site lives in the STAGE name (job properties carry no
-          // callSite for these scheduler-submitted jobs).
-          val sites = js.stageInfos.map(_.name)
-          val isRead = sites.nonEmpty && sites.forall(s =>
-            s.startsWith("parquet at") || s.startsWith("load at") ||
-              s.startsWith("json at"))
-          if (!isRead) jobCount.incrementAndGet()
-          ()
-        }
-      })
+      // near-empty plan read as "this query does nothing".
+      val jobCount = Harness.JobCounter.attach(spark)
       println(f"${"query"}%-26s ${"hashEx"}%6s ${"sorts"}%5s ${"bcast"}%5s ${"pushdown"}%8s ${"wscg"}%4s ${"secs"}%6s  notes")
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, fn) =>
         try {
-          val j0 = jobCount.get()
+          val j0 = jobCount.drained()
           val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
-          // drain the async listener bus with a STABILITY loop, not a
-          // fixed sleep: under load a job-start event can land later
-          // than any fixed delay, mis-attributing the drv:Nj marker to
-          // the next query. Wait until the counter holds still for
-          // 30 ms, bounded at ~500 ms total (dev audit tool — a
-          // stability loop is cheap and removes the flake).
-          var drained = jobCount.get()
-          var stableMs = 0
-          var waitedMs = 0
-          while (stableMs < 30 && waitedMs < 500) {
-            Thread.sleep(10); waitedMs += 10
-            val now = jobCount.get()
-            if (now == drained) stableMs += 10 else { drained = now; stableMs = 0 }
-          }
-          val drvJobs = jobCount.get() - j0
+          val drvJobs = jobCount.drained() - j0
           val hashEx = "Exchange hashpartitioning".r.findAllIn(plan).length
           // "Sort [" matches Sort nodes anywhere, INCLUDING the root
           // operator (every query's final ORDER BY) — SortMergeJoin /
@@ -324,7 +285,7 @@ object Explain {
               .getOrElse("SLOW(floor-justified)")) else None).flatten.mkString(",")
           val secsStr = secs.map(t => f"$t%6.2f").getOrElse("     -")
           println(f"$n%-26s $hashEx%6d $sorts%5d $bcast%5s $push%8s $wscg%4d $secsStr  $notes")
-        } catch { case e: Throwable => println(f"$n%-26s ERROR ${e.toString.take(80)}") }
+        } catch { case NonFatal(e) => println(f"$n%-26s ERROR ${e.toString.take(80)}") }
       }
       if (benchSecs.nonEmpty)
         println(s"bench-tail: $slow UNEXPLAINED queries over the $BudgetSecs s " +

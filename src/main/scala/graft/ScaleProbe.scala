@@ -26,9 +26,6 @@ object ScaleProbe {
   private def floorsMode(spark: SparkSession, baseEdges: Long,
       only: Option[String] = None): Unit = {
     import spark.implicits._
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     // random multigraph with |V| = edges/4: expected degree ~8, so the
     // diameter (hence round count) is O(log V) and nearly constant
     // across the 10× step — exactly the iteration-floor regime the
@@ -188,8 +185,8 @@ object ScaleProbe {
     kernels.filter { case (name, _) => only.forall(name.contains) }
       .foreach { case (name, run) =>
       run(math.max(1000, baseEdges / 10)) // JVM/codegen warmup at tiny size
-      val t1 = timed(run(baseEdges))
-      val t10 = timed(run(baseEdges * 10))
+      val t1 = seconds(run(baseEdges))
+      val t10 = seconds(run(baseEdges * 10))
       println(f"[floors] $name%-28s 1x=$t1%7.2f s  10x=$t10%7.2f s  growth=${t10 / t1}%5.2f x")
     }
   }
@@ -216,9 +213,6 @@ object ScaleProbe {
   private def kernelsMode(spark: SparkSession, baseRows: Long,
       mults: Seq[Long]): Unit = {
     import org.apache.spark.sql.DataFrame
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     // zipf-ish tokens via xxhash: token rank r drawn with p ~ 1/r over
     // a 100k-word domain (pow gives the skew; exact shape irrelevant —
     // only "few hot, long tail" matters for the MG certification)
@@ -279,7 +273,7 @@ object ScaleProbe {
       })
     ).foreach { case (name, run) =>
       run(math.max(1000, baseRows / 10)) // warmup
-      val times = mults.map(m => m -> timed(run(baseRows * m)))
+      val times = mults.map(m => m -> seconds(run(baseRows * m)))
       val growth = times.last._2 / times.head._2
       val span = times.last._1 / times.head._1
       println(f"[kernels] $name%-30s " +
@@ -312,9 +306,6 @@ object ScaleProbe {
       mults: Seq[Long], cores: Int): Unit = {
     import org.apache.spark.sql.Column
     import graft.functions.media._
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     val W = lit(128); val H = lit(96)
     val id = col("id")
     val variants: Seq[(String, Column, Column => Column)] = Seq(
@@ -358,8 +349,8 @@ object ScaleProbe {
       mults.foreach { m =>
         val n = baseBlobs * m
         val bytes = frame(n).select(sum(length(col("b")))).head().getLong(0)
-        val tSynth = timed(frame(n).select(sum(length(col("b")))).head())
-        val tFull = timed(
+        val tSynth = seconds(frame(n).select(sum(length(col("b")))).head())
+        val tFull = seconds(
           frame(n).select(stats(col("b")).as("s")).select(sum(col("s"))).head())
         val tDecode = math.max(1e-3, tFull - tSynth)
         val mbs = bytes / 1e6 / tDecode
@@ -384,9 +375,6 @@ object ScaleProbe {
   private def codecsMode(spark: SparkSession, baseBlobs: Long,
       mults: Seq[Long], cores: Int): Unit = {
     import org.apache.spark.sql.Column
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     // ~4 KiB of repetitive-but-not-constant text per blob (the web-page
     // regime: entropy coding AND match finding both have work to do)
     val raw: Column = expr(
@@ -412,7 +400,7 @@ object ScaleProbe {
       def passB(n: Long) = frame(n)
         .select(sum(length(comp(col("raw"))))).head().getLong(0)
       passA(500); passB(500) // warmup codegen + JIT
-      def min3(f: => Unit): Double = (1 to 3).map(_ => timed(f)).min
+      def min3(f: => Unit): Double = (1 to 3).map(_ => seconds(f)).min
       mults.foreach { m =>
         val n = baseBlobs * m
         val rawBytes = passA(n)
@@ -448,120 +436,66 @@ object ScaleProbe {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("--codecs")) {
-      val blobs = args.drop(1).headOption.map(_.toLong).getOrElse(20000L)
-      val mults = args.drop(2).headOption
-        .map(_.split(",").toSeq.map(_.trim.toLong)).getOrElse(Seq(1L, 10L))
-      require(mults.nonEmpty && mults == mults.sorted && mults.head >= 1,
-        s"multipliers must be ascending and >= 1, got $mults")
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      codecsMode(spark, blobs, mults, cpus.toInt)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("--media")) {
-      val blobs = args.drop(1).headOption.map(_.toLong).getOrElse(20000L)
-      val mults = args.drop(2).headOption
-        .map(_.split(",").toSeq.map(_.trim.toLong)).getOrElse(Seq(1L, 10L))
-      require(mults.nonEmpty && mults == mults.sorted && mults.head >= 1,
-        s"multipliers must be ascending and >= 1, got $mults")
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      mediaMode(spark, blobs, mults, cpus.toInt)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("--kernels")) {
-      val rows = args.drop(1).headOption.map(_.toLong).getOrElse(2000000L)
-      val mults = args.drop(2).headOption
-        .map(_.split(",").toSeq.map(_.trim.toLong)).getOrElse(Seq(1L, 10L))
-      require(mults.nonEmpty && mults == mults.sorted && mults.head >= 1,
-        s"multipliers must be ascending and >= 1, got $mults")
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      kernelsMode(spark, rows, mults)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("--floors")) {
-      val edges = args.drop(1).headOption.filter(_.forall(_.isDigit))
-        .map(_.toLong).getOrElse(200000L)
-      val only = args.drop(1).find(!_.forall(_.isDigit))
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      floorsMode(spark, edges, only)
-      spark.stop()
-      return
-    }
-    val rows = if (args.nonEmpty) args(0).toLong else 5000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  private def seconds(f: => Unit): Double = Harness.timed(f)._2
 
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[scale-probe] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
+  def main(args: Array[String]): Unit = {
+    // `--mode [count] [mults]`: the leading count, then ascending row
+    // multipliers (default 1,10)
+    def count(default: Long) = args.drop(1).headOption.map(_.toLong).getOrElse(default)
+    def mults = {
+      val m = args.drop(2).headOption
+        .map(_.split(",").toSeq.map(_.trim.toLong)).getOrElse(Seq(1L, 10L))
+      require(m.nonEmpty && m == m.sorted && m.head >= 1,
+        s"multipliers must be ascending and >= 1, got $m")
+      m
+    }
+    val cpus = Harness.cpus
+    val spark = Harness.session(cpus)
+    spark.sparkContext.setLogLevel("ERROR")
+    args.headOption match {
+      case Some("--codecs") => codecsMode(spark, count(20000L), mults, cpus)
+      case Some("--media") => mediaMode(spark, count(20000L), mults, cpus)
+      case Some("--kernels") => kernelsMode(spark, count(2000000L), mults)
+      case Some("--floors") =>
+        val edges = args.drop(1).headOption.filter(_.forall(_.isDigit))
+          .map(_.toLong).getOrElse(200000L)
+        floorsMode(spark, edges, args.drop(1).find(!_.forall(_.isDigit)))
+      case _ => defaultMode(spark, args.headOption.map(_.toLong).getOrElse(5000000L), cpus)
+    }
+    spark.stop()
+  }
+
+  /** The default mode: one timed line per core operator path at `rows`
+    * generated orders (or docs/intervals derived from them). */
+  private def defaultMode(spark: SparkSession, rows: Long, cpus: Int): Unit = {
+    def probe[T](name: String)(f: => T): T = {
+      val (r, secs) = Harness.timed(f)
+      println(f"[scale-probe] $name%-28s $secs%8.2f s")
       r
     }
 
     val gen = OrderGen.orders(spark, rows, "probe")
       .withColumnRenamed("order_id", "orderId")
 
-    timed(s"route+counts ($rows rows)") {
+    probe(s"route+counts ($rows rows)") {
       Router.statusCounts(Router.route(gen)).collect()
     }
-    timed("exact cents aggregate") {
+    probe("exact cents aggregate") {
       Router.route(gen).filter(col("status") === Router.Success)
         .agg(sum(Analytics.cents(col("price")))).collect()
     }
-    timed("two-pass prefix sum") {
+    probe("two-pass prefix sum") {
       ScalablePrefix.runningSum(spark,
         gen.select(col("seq").as("k"), Analytics.cents(col("price")).as("v")),
-        "k", "v", numPartitions = cpus.toInt * 4)
+        "k", "v", numPartitions = cpus * 4)
         .agg(max(col("run_sum"))).collect()
     }
-    timed("codec encode+decode (500k)") {
+    probe("codec encode+decode (500k)") {
       val enc = OrderGen.toEnvelopes(
         OrderGen.orders(spark, rows / 10, "probe-codec"))
       graft.stream.OrderPipeline.process(enc).count()
     }
-    timed("raw-datum encode+decode (500k)") {
+    probe("raw-datum encode+decode (500k)") {
       import graft.avro.functions.{from_avro_datum, to_avro_datum}
       OrderGen.orders(spark, rows / 10, "probe-datum")
         .select(from_avro_datum(to_avro_datum(struct(
@@ -580,22 +514,22 @@ object ScaleProbe {
         i => element_at(vocab, (pmod(xxhash64(col("id"), i), lit(16)) + 1).cast("int"))),
         " ").as("text"))
 
-    timed(s"simhash32 kernel ($docCount docs)") {
+    probe(s"simhash32 kernel ($docCount docs)") {
       graft.llm.Dedup.simhash32(docs, "doc_id", "text")
         .agg(count(lit(1))).collect()
     }
-    timed(s"chunk_document UDTF ($docCount docs)") {
+    probe(s"chunk_document UDTF ($docCount docs)") {
       docs.select(col("doc_id"),
           graft.functions.chunking.chunk_document(
             graft.llm.TextOps.tokens(col("text")), 64, 16)
             .as(Seq("chunk_idx", "chunk", "n_toks")))
         .agg(count(lit(1))).collect()
     }
-    timed(s"repetition fractions ($docCount docs)") {
+    probe(s"repetition fractions ($docCount docs)") {
       graft.llm.TextOps.withRepetition(docs, "text", 3)
         .agg(sum(col("uniq_3grams"))).collect()
     }
-    timed(s"composed curation pipeline ($docCount docs)") {
+    probe(s"composed curation pipeline ($docCount docs)") {
       val scored = graft.llm.TextOps.withQualityScore(docs, "text")
       // the generated vocab has no stopwords, so scores are low by
       // construction; 0.1 keeps most docs — the probe measures the
@@ -604,17 +538,17 @@ object ScaleProbe {
       val deduped = graft.llm.Dedup.exactDedup(gated, "doc_id", "text")
       deduped.agg(count(lit(1)), sum(col("dup_count"))).collect()
     }
-    timed(s"zorder2 kernel + range layout ($rows rows)") {
+    probe(s"zorder2 kernel + range layout ($rows rows)") {
       // the layout pass a 100 TB table would run: compute z-values and
       // range-partition by them (sampling + exchange), leaving every
       // partition with tight min/max on BOTH dimensions
       spark.range(rows).select(
           (col("id") % 4096).as("x"), ((col("id") * 31) % 4096).as("y"))
         .withColumn("z", graft.functions.kernels.zorder2(col("x"), col("y")))
-        .repartitionByRange(cpus.toInt * 4, col("z"))
+        .repartitionByRange(cpus * 4, col("z"))
         .agg(count(lit(1))).collect()
     }
-    timed(s"interval bucket-join ($rows intervals)") {
+    probe(s"interval bucket-join ($rows intervals)") {
       val iv = spark.range(rows).select(col("id"),
         (col("id") % 99991).as("s"), (col("id") % 99991 + col("id") % 13).as("e"))
       val win = spark.range(1000).select(col("id").as("w"),
@@ -628,16 +562,16 @@ object ScaleProbe {
         .filter(col("bucket") === expr(s"greatest(s, ps) div $B"))
         .agg(count(lit(1))).collect()
     }
-    timed(s"two-pass grouped rank ($rows rows, 5 groups)") {
+    probe(s"two-pass grouped rank ($rows rows, 5 groups)") {
       // the low-cardinality-window killer: 5 groups over millions of
       // rows — the window form would funnel rows/5 through each task
       ScalablePrefix.groupedRank(spark,
         spark.range(rows).select((col("id") % 5).cast("string").as("g"),
           ((col("id") * 37) % 1000003).cast("double").as("v"), col("id").as("k")),
-        "g", "v", "k", numPartitions = cpus.toInt * 4)
+        "g", "v", "k", numPartitions = cpus * 4)
         .agg(max(col("rnk"))).collect()
     }
-    timed(s"star-contraction CC (${rows / 10}-edge chain)") {
+    probe(s"star-contraction CC (${rows / 10}-edge chain)") {
       // worst-case diameter: one chain component spanning every edge;
       // min-label propagation would need rows/10 rounds
       val chain = spark.range(rows / 10)
@@ -646,7 +580,7 @@ object ScaleProbe {
       val n = labels.filter(col("label") === 0L).count()
       println(f"[scale-probe]   chain rounds=$ccRounds labeled=$n")
     }
-    timed(s"bloom build+probe ($rows rows, 10k keys)") {
+    probe(s"bloom build+probe ($rows rows, 10k keys)") {
       val keys = spark.range(10000).select((col("id") * 13).as("k"))
       val bloom = graft.ops.BloomPrune.buildWords(keys, "k",
         numBits = 1 << 17, numHashes = 3)
@@ -654,7 +588,7 @@ object ScaleProbe {
         .filter(graft.ops.BloomPrune.mightContain(bloom, col("k")))
         .agg(count(lit(1))).collect()
     }
-    timed(s"media header synth+parse ($docCount rows)") {
+    probe(s"media header synth+parse ($docCount rows)") {
       docs.select(graft.functions.media.image_dims(
           graft.llm.Multimodal.synthesizeHeader(
             when(col("doc_id") % 3 === 0, "png")
@@ -663,6 +597,5 @@ object ScaleProbe {
             (col("doc_id") % 480 + 16).cast("int"))).as("d"))
         .filter(col("d").isNotNull).count()
     }
-    spark.stop()
   }
 }

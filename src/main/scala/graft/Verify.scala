@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -12,14 +12,7 @@ object Verify {
       case Array(a, b)    => (a, b, Option.empty[Set[String]])
       case Array(a, b, c) => (a, b, Some(c.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     // set before any concurrent planning: the events scans need it at
     // analysis time (SparkEntry.events sets it too, but setting it once
     // up front removes any order dependence across the pool's threads)
@@ -30,23 +23,21 @@ object Verify {
     // others' execution (Spark's scheduler handles concurrent jobs),
     // roughly halving the gate's wall time vs sequential
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val futures = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-      scala.concurrent.Future {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    try {
+      SparkEntry.queries.toSeq
+        .filter { case (name, _) => only.forall(_.contains(name)) }
+        .map { case (name, fn) =>
+          val dump: Runnable = () =>
+            try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/$name")
+            catch { case NonFatal(e) =>
+              System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            }
+          pool.submit(dump)
         }
-      }
-    }
-    scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(futures),
-      scala.concurrent.duration.Duration.Inf)
-    pool.shutdown()
+        // a fatal error surfaces here (wrapped) and fails the dump
+        .foreach(_.get())
+    } finally pool.shutdownNow()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

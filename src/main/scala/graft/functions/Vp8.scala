@@ -35,9 +35,6 @@ object Vp8 {
       y: Array[Byte], u: Array[Byte], v: Array[Byte],
       alpha: Array[Byte] = null) // ALPH plane (w*h) or null
 
-  /** Dev-only header trace (Vp8Debug flips it; never set in queries). */
-  private[graft] var DebugHeaders = false
-
   // ---------------------------------------------------------------- bool
 
   /** §7.3 boolean arithmetic decoder. Reads past the partition end
@@ -370,15 +367,6 @@ object Vp8 {
     hdr.skipEnabled = br.bool(128) == 1
     if (hdr.skipEnabled) hdr.skipProb = br.literal(8)
     if (br.overread > 2) return None
-    if (DebugHeaders) println(
-      s"[vp8hdr] ${hdr.w}x${hdr.h} seg=${hdr.segEnabled}/${hdr.segUpdateMap}" +
-        s"/abs=${hdr.segAbs} q=${hdr.segQuant.mkString(",")}" +
-        s" lf=${hdr.segLf.mkString(",")} treeP=${hdr.segTreeProbs.mkString(",")}" +
-        s" filt=${hdr.filterType}/${hdr.filterLevel}/${hdr.sharpness}" +
-        s" lfd=${hdr.lfDeltaEnabled} ref=${hdr.refLfDelta.mkString(",")}" +
-        s" mode=${hdr.modeLfDelta.mkString(",")} parts=$nParts yac=${hdr.yacQi}" +
-        s" d=${hdr.ydcDelta},${hdr.y2dcDelta},${hdr.y2acDelta}," +
-        s"${hdr.uvdcDelta},${hdr.uvacDelta} skip=${hdr.skipEnabled}/${hdr.skipProb}")
 
     // §11 per-MB prediction records (all in partition 0, raster order)
     val mb = new MbInfo(hdr.mbW, hdr.mbH)
@@ -419,11 +407,6 @@ object Vp8 {
           while (k < 4) { aboveB(mbX * 4 + k) = imp; leftB(k) = imp; k += 1 }
         }
         mb.uvMode(idx) = br.tree(UvModeTree, KfUvModeProb, 0).toByte
-        if (DebugHeaders) println(s"[vp8mb] ($mbX,$mbY) seg=${mb.segment(idx)} " +
-          s"skip=${mb.skip(idx)} y=${mb.yMode(idx)} uv=${mb.uvMode(idx)}" +
-          (if (mb.yMode(idx) == 4)
-            " b=" + (0 until 16).map(k => mb.bModes(idx * 16 + k)).mkString(",")
-          else ""))
         mbX += 1
       }
       mbY += 1
@@ -886,12 +869,6 @@ object Vp8 {
       while (b < 16) {
         val bx = mbX * 4 + (b & 3); val by = mbY * 4 + (b >> 2)
         predB(Y, pw, bx, by, mb.bModes(idx * 16 + b).toInt, y0 - 1, pw)
-        if (DebugHeaders && mbX == 0 && mbY == 0) {
-          val pr = (0 until 4).map(r => (0 until 4)
-            .map(c => Y((by * 4 + r) * pw + bx * 4 + c)).mkString(",")).mkString(" | ")
-          println(s"[vp8blk] b=$b mode=${mb.bModes(idx * 16 + b)} pred: $pr " +
-            s"coef: ${(0 until 16).map(k => coeffs(b * 16 + k)).mkString(",")}")
-        }
         if (!mb.skip(idx)) idctAdd(coeffs, b * 16, Y, pw, bx * 4, by * 4)
         b += 1
       }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Bucketed (pre-shuffled) table layout — the co-located join pattern.
@@ -31,7 +32,7 @@ object Bucketing {
           java.nio.file.Files.walk(root)
             .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
             .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        } catch { case _: Throwable => () } // best-effort cleanup
+        } catch { case NonFatal(_) => () } // best-effort cleanup
       }))
   }
 

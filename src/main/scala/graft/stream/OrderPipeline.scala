@@ -89,33 +89,32 @@ object OrderPipeline {
     * so a replayed batch (failure between sink writes and checkpoint
     * commit — the at-least-once window) rewrites identical data instead
     * of appending duplicates. This is what turns the checkpoint's
-    * at-least-once replay contract into effectively-once sink output. */
+    * at-least-once replay contract into effectively-once sink output.
+    * The batch is not cached: each write re-scans and re-decodes it
+    * (routing is deterministic), which measures no slower than caching
+    * the batch with its raw `value` bytes. */
   def writeFanOut(batch: DataFrame, batchId: Long, outDir: String): Unit = {
-    batch.persist()
-    try {
-      batch.filter(col("status") === Router.Success)
-        .select(col("topic"), col("partition"), col("offset"),
-          col("orderId"), col("product"), col("price"))
-        .write.mode("overwrite").parquet(s"$outDir/success/batch=$batchId")
+    batch.filter(col("status") === Router.Success)
+      .select(col("topic"), col("partition"), col("offset"),
+        col("orderId"), col("product"), col("price"))
+      .write.mode("overwrite").parquet(s"$outDir/success/batch=$batchId")
 
-      Router.dlqEnvelope(
-          Router.enrichDlq(batch, unix_timestamp(col("timestamp"))),
-          col("value"), col("key"))
-        .write.mode("overwrite").parquet(s"$outDir/dlq/batch=$batchId")
+    Router.dlqEnvelope(
+        Router.enrichDlq(batch, unix_timestamp(col("timestamp"))),
+        col("value"), col("key"))
+      .write.mode("overwrite").parquet(s"$outDir/dlq/batch=$batchId")
 
-      batch.filter(col("status") === Router.Transient)
-        // key/value ride along so a record that EXHAUSTS its retries
-        // still reaches the DLQ with the original payload bytes — the
-        // S6 contract (and consumer.py forwards the original message);
-        // without them the exhausted-retry DLQ records would be
-        // decoded-fields-only, unrecoverable for re-publication
-        .select(col("topic"), col("partition"), col("offset"),
-          col("orderId"), col("product"), col("price"),
-          col("key"), col("value"))
-        .withColumn("attempts", lit(1))
-        .write.mode("overwrite").parquet(s"$outDir/retry/batch=$batchId")
-    } finally batch.unpersist()
-    ()
+    batch.filter(col("status") === Router.Transient)
+      // key/value ride along so a record that EXHAUSTS its retries
+      // still reaches the DLQ with the original payload bytes — the
+      // S6 contract (and consumer.py forwards the original message);
+      // without them the exhausted-retry DLQ records would be
+      // decoded-fields-only, unrecoverable for re-publication
+      .select(col("topic"), col("partition"), col("offset"),
+        col("orderId"), col("product"), col("price"),
+        col("key"), col("value"))
+      .withColumn("attempts", lit(1))
+      .write.mode("overwrite").parquet(s"$outDir/retry/batch=$batchId")
   }
 
   /** Start the checkpointed fan-out pipeline. Writes:

@@ -339,6 +339,25 @@ class PlanAuditSpec extends SparkSpec {
         s"budget they cite: $over — re-measure (TimeQ) or re-shape")
   }
 
+  test("JobCounter skips schema-inference reads, counts actions, drains stably") {
+    val dir = tmpDir("graft-jobcounter") + "/t"
+    spark.range(100).write.parquet(dir)
+    val sc = spark.sparkContext
+    val jobs = Harness.JobCounter.attach(spark)
+    try {
+      val j0 = jobs.drained()
+      sc.setJobGroup("jobcounter-read", "schema inference")
+      val df = try spark.read.parquet(dir) finally sc.clearJobGroup()
+      // the read did run a job: the filter, not its absence, keeps it out
+      assert(sc.statusTracker.getJobIdsForGroup("jobcounter-read").nonEmpty)
+      assert(jobs.drained() === j0)
+      df.collect()
+      val j1 = jobs.drained()
+      assert(j1 > j0)
+      assert(jobs.drained() === j1)
+    } finally sc.removeSparkListener(jobs)
+  }
+
   test("failure counters via observable metrics (A2 observe variant)") {
     val obs = Observation("routing")
     val routed = Router.route(
