@@ -3,7 +3,8 @@ package graft.avro
 import org.apache.avro.Schema
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Literal,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -20,18 +21,14 @@ import org.apache.spark.sql.types._
   * semantics — the decode-failure row is routed to the DLQ by the R4
   * null-check predicate, mirroring consumer.py:228-229 + 272-276). */
 case class FromAvroOcf(child: Expression, schemaJson: String)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   @transient private lazy val avroSchema = new Schema.Parser().parse(schemaJson)
   @transient private lazy val structType = AvroOcf.sparkTypeFor(avroSchema)
   @transient private lazy val hs = AvroOcf.headerAndSync(avroSchema)
 
   override def dataType: DataType = structType
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"from_avro_ocf expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     try AvroOcf.decodeRow(input.asInstanceOf[Array[Byte]], structType, avroSchema, hs)
     catch { case _: Exception => null }
@@ -42,17 +39,13 @@ case class FromAvroOcf(child: Expression, schemaJson: String)
 
 /** `to_avro_ocf(struct)` -> binary. Deterministic (fixed sync marker). */
 case class ToAvroOcf(child: Expression, schemaJson: String)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   @transient private lazy val avroSchema = new Schema.Parser().parse(schemaJson)
   @transient private lazy val structType = child.dataType.asInstanceOf[StructType]
   @transient private lazy val hs = AvroOcf.headerAndSync(avroSchema)
 
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = child.dataType match {
-    case _: StructType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"to_avro_ocf expects struct input, got $other")
-  }
+  override def inputTypes = Seq(StructType)
   override def nullSafeEval(input: Any): Any =
     AvroOcf.encodeRow(input.asInstanceOf[InternalRow], structType, avroSchema, hs)
   override protected def withNewChildInternal(newChild: Expression): ToAvroOcf =
@@ -64,17 +57,13 @@ case class ToAvroOcf(child: Expression, schemaJson: String)
   * container framing (the schema travels out-of-band — SURVEY §7.3's
   * scale mode). Null on decode failure (PERMISSIVE). */
 case class FromAvroDatum(child: Expression, schemaJson: String)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   @transient private lazy val avroSchema = new Schema.Parser().parse(schemaJson)
   @transient private lazy val structType = AvroOcf.sparkTypeFor(avroSchema)
 
   override def dataType: DataType = structType
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"from_avro_datum expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     try AvroOcf.decodeDatumRow(input.asInstanceOf[Array[Byte]], structType, avroSchema)
     catch { case _: Exception => null }
@@ -85,16 +74,12 @@ case class FromAvroDatum(child: Expression, schemaJson: String)
 
 /** `to_avro_datum(struct)` -> binary (raw datum, no framing). */
 case class ToAvroDatum(child: Expression, schemaJson: String)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   @transient private lazy val avroSchema = new Schema.Parser().parse(schemaJson)
   @transient private lazy val structType = child.dataType.asInstanceOf[StructType]
 
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = child.dataType match {
-    case _: StructType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"to_avro_datum expects struct input, got $other")
-  }
+  override def inputTypes = Seq(StructType)
   override def nullSafeEval(input: Any): Any =
     AvroOcf.encodeDatumRow(input.asInstanceOf[InternalRow], structType, avroSchema)
   override protected def withNewChildInternal(newChild: Expression): ToAvroDatum =
@@ -107,16 +92,12 @@ case class ToAvroDatum(child: Expression, schemaJson: String)
   * datum (the public Confluent wire-format spec — what most Kafka
   * shops actually put on the wire, vs the reference's OCF framing). */
 case class ToAvroConfluent(child: Expression, schemaJson: String, schemaId: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   @transient private lazy val avroSchema = new Schema.Parser().parse(schemaJson)
   @transient private lazy val structType = child.dataType.asInstanceOf[StructType]
 
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = child.dataType match {
-    case _: StructType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"to_avro_confluent expects struct input, got $other")
-  }
+  override def inputTypes = Seq(StructType)
   override def nullSafeEval(input: Any): Any =
     AvroOcf.encodeConfluentRow(input.asInstanceOf[InternalRow], structType,
       avroSchema, schemaId)
@@ -138,7 +119,7 @@ case class ToAvroConfluent(child: Expression, schemaJson: String, schemaId: Int)
   * like the OCF path). */
 case class FromAvroConfluent(child: Expression, readerSchemaJson: String,
     registry: SchemaRegistryResolver)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   @transient private lazy val readerSchema = new Schema.Parser().parse(readerSchemaJson)
   @transient private lazy val structType = AvroOcf.sparkTypeFor(readerSchema)
   // cache-miss path: resolve (a live client fetches here) → parse →
@@ -156,11 +137,7 @@ case class FromAvroConfluent(child: Expression, readerSchemaJson: String,
 
   override def dataType: DataType = structType
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"from_avro_confluent expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any = {
     val bytes = input.asInstanceOf[Array[Byte]]
     val id = AvroOcf.confluentSchemaId(bytes)
@@ -187,15 +164,10 @@ case class FromAvroConfluent(child: Expression, readerSchemaJson: String,
   * codec family). */
 case class AvroCanRead(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = org.apache.spark.sql.types.BooleanType
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-    case (StringType, StringType) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"avro_can_read expects (string, string) schema JSON, got $other")
-  }
+  override def inputTypes = Seq(StringType, StringType)
   override def nullSafeEval(w: Any, r: Any): Any =
     try java.lang.Boolean.valueOf(SchemaCompat.canRead(
       AvroCanRead.parse(w.toString), AvroCanRead.parse(r.toString)))
@@ -226,13 +198,9 @@ object AvroCanRead {
   * is reported 'confluent' — triage consumers must treat the label as
   * a routing hint, not proof of framing. */
 case class AvroFraming(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StringType
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"avro_framing expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any = {
     val b = input.asInstanceOf[Array[Byte]]
     val kind =
@@ -291,38 +259,41 @@ object functions {
   def avro_framing(c: Column): Column =
     ColumnBridge.column(AvroFraming(ColumnBridge.expression(c)))
 
-  /** Register all four for SQL use: `from_avro_ocf(col, 'schema-json')`. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def lit(e: Expression): String = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(s, StringType) if s != null => s.toString
-      case other => throw new IllegalArgumentException(s"schema must be a string literal, got $other")
-    }
-    reg.createOrReplaceTempFunction(
-      "from_avro_ocf", es => FromAvroOcf(es.head, lit(es(1))), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "to_avro_ocf", es => ToAvroOcf(es.head, lit(es(1))), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "from_avro_datum", es => FromAvroDatum(es.head, lit(es(1))), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "to_avro_datum", es => ToAvroDatum(es.head, lit(es(1))), "scala_udf")
-    def intLit(e: Expression): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v, IntegerType) if v != null =>
-        v.asInstanceOf[Int]
-      case other => throw new IllegalArgumentException(s"schema id must be an int literal, got $other")
-    }
+  /** A string-literal SQL argument, such as a schema. */
+  private[graft] def stringLiteral(e: Expression): String = e match {
+    case Literal(s, StringType) if s != null => s.toString
+    case other => throw new IllegalArgumentException(s"expected a string literal, got $other")
+  }
+
+  /** An int-literal SQL argument, such as a schema id. */
+  private[graft] def intLiteral(e: Expression): Int = e match {
+    case Literal(v: Int, IntegerType) => v
+    case other => throw new IllegalArgumentException(s"expected an int literal, got $other")
+  }
+
+  /** The codec's SQL functions: name, expression class, and the builder
+    * from the call's arguments. `register` installs them on a session;
+    * `graft.plans.GraftExtensions` injects them into extension sessions. */
+  private[graft] val sqlFunctions
+      : Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("from_avro_ocf", classOf[FromAvroOcf], es => FromAvroOcf(es.head, stringLiteral(es(1)))),
+    ("to_avro_ocf", classOf[ToAvroOcf], es => ToAvroOcf(es.head, stringLiteral(es(1)))),
+    ("from_avro_datum", classOf[FromAvroDatum],
+      es => FromAvroDatum(es.head, stringLiteral(es(1)))),
+    ("to_avro_datum", classOf[ToAvroDatum], es => ToAvroDatum(es.head, stringLiteral(es(1)))),
     // SQL surface covers the single-version case (id -> same schema as
     // reader); the multi-version registry map is the Scala API's job
-    reg.createOrReplaceTempFunction(
-      "to_avro_confluent", es => ToAvroConfluent(es.head, lit(es(1)), intLit(es(2))), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "from_avro_confluent",
-      es => FromAvroConfluent(es.head, lit(es(1)),
-        StaticSchemaRegistry(Map(intLit(es(2)) -> lit(es(1))))),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "avro_can_read", es => AvroCanRead(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "avro_framing", es => AvroFraming(es.head), "scala_udf")
-  }
+    ("to_avro_confluent", classOf[ToAvroConfluent],
+      es => ToAvroConfluent(es.head, stringLiteral(es(1)), intLiteral(es(2)))),
+    ("from_avro_confluent", classOf[FromAvroConfluent],
+      es => FromAvroConfluent(es.head, stringLiteral(es(1)),
+        StaticSchemaRegistry(Map(intLiteral(es(2)) -> stringLiteral(es(1)))))),
+    ("avro_can_read", classOf[AvroCanRead], es => AvroCanRead(es.head, es(1))),
+    ("avro_framing", classOf[AvroFraming], es => AvroFraming(es.head)))
+
+  /** Register the SQL functions: `from_avro_ocf(col, 'schema-json')`. */
+  def register(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
 }

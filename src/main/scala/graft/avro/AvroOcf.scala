@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileStream, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.io.{BinaryDecoder, DecoderFactory}
 import org.apache.avro.util.Utf8
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -302,9 +303,8 @@ object AvroOcf {
   /** RAW datum bytes -> InternalRow. Throws on malformed input; callers
     * choose null-on-error (PERMISSIVE). */
   def decodeDatumRow(bytes: Array[Byte], sparkType: StructType, readerSchema: Schema): InternalRow = {
-    val dec = org.apache.avro.io.DecoderFactory.get()
-      .binaryDecoder(bytes, 0, bytes.length, null)
-    val rec = new GenericDatumReader[GenericRecord](readerSchema).read(null, dec)
+    val rec = readBounded(() => decoderAt(bytes, 0), readerSchema,
+      new GenericDatumReader[GenericRecord](readerSchema))
     recordToRow(rec, sparkType, readerSchema)
   }
 
@@ -314,11 +314,25 @@ object AvroOcf {
     * registry id embedded in the frame). */
   def decodeDatumRowResolved(bytes: Array[Byte], offset: Int, sparkType: StructType,
       writerSchema: Schema, readerSchema: Schema): InternalRow = {
-    val dec = org.apache.avro.io.DecoderFactory.get()
-      .binaryDecoder(bytes, offset, bytes.length - offset, null)
-    val rec = new GenericDatumReader[GenericRecord](writerSchema, readerSchema)
-      .read(null, dec)
+    val rec = readBounded(() => decoderAt(bytes, offset), writerSchema,
+      new GenericDatumReader[GenericRecord](writerSchema, readerSchema))
     recordToRow(rec, sparkType, readerSchema)
+  }
+
+  private def decoderAt(bytes: Array[Byte], offset: Int): BinaryDecoder =
+    DecoderFactory.get().binaryDecoder(bytes, offset, bytes.length - offset, null)
+
+  /** One datum written with `writerSchema`, from a decoder that `at`
+    * positions at its first byte. `GenericDatumReader.read` allocates a
+    * string, bytes, array or map at its claimed length before it reads
+    * the content, so a few corrupt bytes can claim gigabytes. A `skip`
+    * pass over the same bytes runs first: it checks every claim against
+    * the bytes present and allocates nothing of the claimed size, so the
+    * read that follows allocates in proportion to the input. */
+  private def readBounded(at: () => BinaryDecoder, writerSchema: Schema,
+      reader: GenericDatumReader[GenericRecord]): GenericRecord = {
+    GenericDatumReader.skip(writerSchema, at())
+    reader.read(null, at())
   }
 
   /** Confluent Schema Registry wire format: `0x00` magic byte, 4-byte
@@ -384,12 +398,15 @@ object AvroOcf {
     // sync markers, codecs, writer schemas) take the generic path below.
     val (header, _) = hs
     if (startsWith(bytes, header) && bytes.length > header.length) {
-      val dec = org.apache.avro.io.DecoderFactory.get()
-        .binaryDecoder(bytes, header.length, bytes.length - header.length, null)
-      val count = dec.readLong()
-      dec.readLong() // block byte size
+      val block = decoderAt(bytes, header.length)
+      val count = block.readLong()
+      block.readLong() // block byte size
       if (count >= 1) {
-        val rec = new GenericDatumReader[GenericRecord](readerSchema).read(null, dec)
+        val datum = () => {
+          val dec = decoderAt(bytes, header.length); dec.readLong(); dec.readLong(); dec
+        }
+        val rec = readBounded(datum, readerSchema,
+          new GenericDatumReader[GenericRecord](readerSchema))
         return recordToRow(rec, sparkType, readerSchema)
       }
     }

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -131,15 +131,9 @@ object Adpcm {
 /** `synth_adpcm(id, n)` -> an IMA ADPCM block per [[Adpcm.synth]]. */
 case class SynthAdpcm(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (left.dataType, right.dataType) match {
-      case (LongType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_adpcm expects (long id, int n), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType)
   override def nullSafeEval(idA: Any, nA: Any): Any =
     Adpcm.synth(idA.asInstanceOf[Long], nA.asInstanceOf[Int])
   override protected def withNewChildrenInternal(l: Expression, r: Expression): SynthAdpcm =
@@ -152,18 +146,14 @@ case class SynthAdpcm(left: Expression, right: Expression)
   * null on malformed blocks. sum_sq via addExact (int64-overflow
   * detection per the audio_stats contract). */
 case class AdpcmStats(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("n_samples", LongType), StructField("sum_abs", LongType),
     StructField("sum_sq", LongType), StructField("peak", IntegerType),
     StructField("last_pred", IntegerType),
     StructField("last_step_index", IntegerType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"adpcm_stats expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any = {
     val b = input.asInstanceOf[Array[Byte]]
     Adpcm.decode(b) match {

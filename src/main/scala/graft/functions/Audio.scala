@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -128,14 +128,10 @@ object G711 {
 /** `wav_kind(binary)` -> WAV container triage string ([[G711.kind]])
   * — the dispatch step before audio decoders, the jpeg_kind twin. */
 case class WavKind(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StringType
   override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"wav_kind expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     UTF8String.fromString(G711.kind(input.asInstanceOf[Array[Byte]]))
   override protected def withNewChildInternal(newChild: Expression): WavKind =
@@ -146,15 +142,9 @@ case class WavKind(child: Expression)
 /** `synth_wav_g711(id, n, alaw)` -> a complete G.711 WAV fixture. */
 case class SynthWavG711(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, BooleanType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_wav_g711 expects (long id, int n, boolean alaw), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, BooleanType)
   override def nullSafeEval(idA: Any, nA: Any, aA: Any): Any =
     G711.synth(idA.asInstanceOf[Long], nA.asInstanceOf[Int],
       aA.asInstanceOf[Boolean])
@@ -171,17 +161,13 @@ case class SynthWavG711(first: Expression, second: Expression, third: Expression
   * G.711's ±32256 range below ~2^32 samples, checked anyway). Null
   * for non-G.711 format tags or a malformed container. */
 case class AudioStatsG711(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("law", StringType), StructField("n_samples", LongType),
     StructField("sum_abs", LongType), StructField("sum_sq", LongType),
     StructField("peak", IntegerType), StructField("zero_crossings", LongType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"audio_stats_g711 expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any = {
     val b = input.asInstanceOf[Array[Byte]]
     val law = G711.formatTag(b) match {

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -94,13 +94,9 @@ object BlobKind {
 
 /** `blob_kind(binary)` -> string label per [[BlobKind.kind]]. */
 case class BlobKindOf(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StringType
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"blob_kind expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     UTF8String.fromString(BlobKind.kind(input.asInstanceOf[Array[Byte]]))
   override protected def withNewChildInternal(newChild: Expression): BlobKindOf =
@@ -112,15 +108,10 @@ case class BlobKindOf(child: Expression)
   * [[BlobKind.kindHinted]] (hint null-safe: null hint == no hint). */
 case class BlobKindHinted(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-    case (BinaryType, StringType) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"blob_kind_hinted expects (binary, string) input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType, StringType)
   // null hint must NOT null the result: evaluate with nulls passed through
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val blob = left.eval(input)

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -103,15 +103,9 @@ object Bmp {
   * bottom-up flip and the BGR swap are both value-checked. */
 case class SynthBmp(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_bmp expects (long id, int w, int h), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType)
   override def nullSafeEval(idA: Any, wA: Any, hA: Any): Any = {
     val id = idA.asInstanceOf[Long]
     val w = wA.asInstanceOf[Int]; val h = hA.asInstanceOf[Int]
@@ -142,7 +136,7 @@ case class SynthBmp(first: Expression, second: Expression, third: Expression)
   * from a REAL 24-bit BMP decode (bottom-up flip + BGR swap applied).
   * Null for anything [[Bmp.decode]] rejects. */
 case class BmpStatsRgb(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("width", IntegerType), StructField("height", IntegerType),
     StructField("n_px", LongType), StructField("px_sum", LongType),
@@ -150,11 +144,7 @@ case class BmpStatsRgb(child: Expression)
     StructField("b_sum", LongType),
     StructField("px_min", IntegerType), StructField("px_max", IntegerType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"bmp_stats_rgb expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Bmp.decode(input.asInstanceOf[Array[Byte]]) match {
       case None => null

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -272,7 +272,7 @@ object Brotli {
   * n_store_blocks, store_bytes, n_meta_blocks, skip_bytes,
   * compressed_mlen) per [[Brotli.meta]]. */
 case class BrotliMeta(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("kind", StringType), StructField("wbits", IntegerType),
     StructField("window_size", LongType),
@@ -281,11 +281,7 @@ case class BrotliMeta(child: Expression)
     StructField("n_meta_blocks", IntegerType),
     StructField("skip_bytes", LongType),
     StructField("compressed_mlen", LongType)))
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"brotli_meta expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any = {
     val m = Brotli.meta(input.asInstanceOf[Array[Byte]])
     new GenericInternalRow(Array[Any](UTF8String.fromString(m.kind),
@@ -299,13 +295,9 @@ case class BrotliMeta(child: Expression)
 
 /** `brotli_wrap(binary)` -> a store-mode brotli stream. */
 case class BrotliWrap(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"brotli_wrap expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Brotli.wrap(input.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(newChild: Expression): BrotliWrap =
@@ -316,14 +308,10 @@ case class BrotliWrap(child: Expression)
 /** `brotli_unwrap(binary)` -> decoded bytes for store-mode streams,
   * null otherwise (incl. compressed meta-blocks — scope stated). */
 case class BrotliUnwrap(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"brotli_unwrap expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Brotli.unwrap(input.asInstanceOf[Array[Byte]]).orNull
   override protected def withNewChildInternal(newChild: Expression): BrotliUnwrap =
@@ -335,14 +323,9 @@ case class BrotliUnwrap(child: Expression)
   * [[Brotli.synthStructural]]. */
 case class SynthBrotliStructural(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-    case (LongType, BooleanType) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"synth_brotli_structural expects (long, boolean), got $other")
-  }
+  override def inputTypes = Seq(LongType, BooleanType)
   override def nullSafeEval(id: Any, c: Any): Any =
     Brotli.synthStructural(id.asInstanceOf[Long], c.asInstanceOf[Boolean])
   override protected def withNewChildrenInternal(l: Expression,

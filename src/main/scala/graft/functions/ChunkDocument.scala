@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Generator,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -28,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * prune `unrequiredChildIndex` like any built-in explode.
   */
 case class ChunkDocument(child: Expression, maxTokens: Int, overlap: Int)
-    extends UnaryExpression with Generator with CodegenFallback {
+    extends UnaryExpression with Generator with CodegenFallback with ExpectsInputTypes {
   require(maxTokens > 0, "maxTokens must be positive")
   require(overlap >= 0 && overlap < maxTokens,
     s"overlap must be in [0, maxTokens): got $overlap for maxTokens=$maxTokens")
@@ -40,12 +41,7 @@ case class ChunkDocument(child: Expression, maxTokens: Int, overlap: Int)
     StructField("chunk", StringType, nullable = false),
     StructField("n_chunk_tokens", IntegerType, nullable = false)))
 
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(StringType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"chunk_document expects array<string>, got $other")
-  }
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -195,17 +195,13 @@ object Exif {
 /** `exif_meta(jpeg_binary)` -> struct(orientation, make, datetime,
   * px_width, px_height) or null when no readable EXIF is present. */
 case class ExifMeta(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("orientation", IntegerType), StructField("make", StringType),
     StructField("datetime", StringType), StructField("px_width", LongType),
     StructField("px_height", LongType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"exif_meta expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Exif.extract(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -225,15 +221,9 @@ case class ExifMeta(child: Expression)
 case class JpegWithExif(first: Expression, second: Expression,
     third: Expression, fourth: Expression)
     extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType, fourth.dataType) match {
-      case (BinaryType, LongType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"jpeg_with_exif expects (binary, long, int, int), got $other")
-    }
+  override def inputTypes = Seq(BinaryType, LongType, IntegerType, IntegerType)
   override def nullSafeEval(bA: Any, idA: Any, wA: Any, hA: Any): Any =
     Exif.withExif(bA.asInstanceOf[Array[Byte]], idA.asInstanceOf[Long],
       wA.asInstanceOf[Int], hA.asInstanceOf[Int])

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -146,7 +147,7 @@ object Flac {
 
 /** `flac_meta(binary)` per [[Flac.meta]], or null. */
 case class FlacMeta(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("min_block", IntegerType), StructField("max_block", IntegerType),
     StructField("sample_rate", LongType), StructField("channels", IntegerType),
@@ -158,11 +159,7 @@ case class FlacMeta(child: Expression)
     StructField("n_picture", IntegerType), StructField("meta_bytes", LongType),
     StructField("has_frames", BooleanType), StructField("md5_hex", StringType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"flac_meta expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Flac.meta(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -178,14 +175,9 @@ case class FlacMeta(child: Expression)
 
 /** `synth_flac(id, corrupt)` per [[Flac.synth]]. */
 case class SynthFlac(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-    case (LongType, BooleanType) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"synth_flac expects (long, boolean), got $other")
-  }
+  override def inputTypes = Seq(LongType, BooleanType)
   override def nullSafeEval(id: Any, c: Any): Any =
     Flac.synth(id.asInstanceOf[Long], c.asInstanceOf[Boolean])
   override protected def withNewChildrenInternal(l: Expression,

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -64,16 +64,10 @@ object Geohash {
   * string, or null for out-of-range coordinates/precision. */
 case class GeohashEncode(first: Expression, second: Expression,
     third: Expression)
-    extends TernaryExpression with CodegenFallback {
+    extends TernaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, LongType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"geohash expects (long lat_micro, long lon_micro, int precision), got $other")
-    }
+  override def inputTypes = Seq(LongType, LongType, IntegerType)
   override def nullSafeEval(latA: Any, lonA: Any, pA: Any): Any = {
     val s = Geohash.encode(latA.asInstanceOf[Long], lonA.asInstanceOf[Long],
       pA.asInstanceOf[Int])

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -213,15 +213,9 @@ object Ico {
 /** `synth_ico(id, n)` -> an ICO container per [[Ico.synth]]. */
 case class SynthIco(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (left.dataType, right.dataType) match {
-      case (LongType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_ico expects (long id, int n), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType)
   override def nullSafeEval(idA: Any, nA: Any): Any =
     Ico.synth(idA.asInstanceOf[Long], nA.asInstanceOf[Int])
   override protected def withNewChildrenInternal(l: Expression, r: Expression): SynthIco =
@@ -235,7 +229,7 @@ case class SynthIco(left: Expression, right: Expression)
   * resolution). Null if the container is malformed or nothing is
   * readable. */
 case class IcoStats(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("n_entries", IntegerType), StructField("n_readable", IntegerType),
     StructField("width", IntegerType), StructField("height", IntegerType),
@@ -243,11 +237,7 @@ case class IcoStats(child: Expression)
     StructField("r_sum", LongType), StructField("g_sum", LongType),
     StructField("b_sum", LongType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"ico_stats expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Ico.decode(input.asInstanceOf[Array[Byte]]) match {
       case None => null

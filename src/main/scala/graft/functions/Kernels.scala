@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.{ColumnBridge, InputTypes}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -24,15 +25,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * shingles joined by single spaces (w-shingling; Broder '97). Arrays
   * shorter than k yield an empty array. */
 case class WordShingles(child: Expression, k: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   require(k > 0, "k must be positive")
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(StringType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"word_shingles expects array<string>, got $other")
-  }
+  override def inputTypes = Seq(ArrayType(StringType))
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val n = arr.numElements()
@@ -72,17 +68,9 @@ case class WordShingles(child: Expression, k: Int)
   * similarity/clustering operator, so falling out of codegen here
   * would break the surrounding stage into interpreted islands. */
 case class FixedPointDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
-  private def elemOk(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes() =
-    if (elemOk(left.dataType) && elemOk(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"fixed_point_dot expects array<float|double>, got ${left.dataType}, ${right.dataType}")
+  override def inputTypes = Seq(InputTypes.floatOrDoubleArray, InputTypes.floatOrDoubleArray)
   private def toD(arr: ArrayData, isFloat: Boolean, i: Int): Double =
     if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
   override def nullable: Boolean = true
@@ -154,20 +142,9 @@ case class FixedPointDot(left: Expression, right: Expression)
   * the similarity operators. Null semantics match zip_with: length
   * mismatch or any null element ⇒ null. */
 case class FixedPointDotCent(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
-  private def vecOk(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes() =
-    if (vecOk(left.dataType) && (right.dataType match {
-      case ArrayType(LongType, _) => true; case _ => false
-    }))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"fixed_point_dot_cent expects (array<float|double>, array<long>), " +
-        s"got ${left.dataType}, ${right.dataType}")
+  override def inputTypes = Seq(InputTypes.floatOrDoubleArray, ArrayType(LongType))
   override def nullable: Boolean = true
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
@@ -229,17 +206,9 @@ case class FixedPointDotCent(left: Expression, right: Expression)
   * any null element ⇒ null, matching the zip_with formulation and
   * the DuckDB `list_sum(list_transform(...))` oracle bit-for-bit. */
 case class FixedPointL2(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
-  private def elemOk(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes() =
-    if (elemOk(left.dataType) && elemOk(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"fixed_point_l2 expects array<float|double>, got ${left.dataType}, ${right.dataType}")
+  override def inputTypes = Seq(InputTypes.floatOrDoubleArray, InputTypes.floatOrDoubleArray)
   private def toD(arr: ArrayData, isFloat: Boolean, i: Int): Double =
     if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
   override def nullable: Boolean = true
@@ -308,15 +277,10 @@ case class FixedPointL2(left: Expression, right: Expression)
   * tokens are skipped; an all-null or empty array yields null (the
   * exploded form emits no row for such docs). */
 case class SimHash32(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(StringType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"simhash32 expects array<string>, got $other")
-  }
+  override def inputTypes = Seq(ArrayType(StringType))
   // one digest per thread, reset per token: the JCA provider lookup in
   // getInstance is per-row overhead in a kernel whose whole point is
   // that the scan is the only cost (ThreadLocal because a plan's
@@ -371,21 +335,13 @@ case class SimHash32(child: Expression)
   * tested) but a single tight loop instead of interpreted per-element
   * closures. Null for null input or any null element. */
 case class QuantizeInt8(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("scale", DoubleType, nullable = false),
     StructField("codes", ArrayType(IntegerType, containsNull = false), nullable = false),
     StructField("abs_err_fp", LongType, nullable = false)))
   override def nullable: Boolean = true
-  private def elemOk(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes() =
-    if (elemOk(child.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"quantize_int8 expects array<float|double>, got ${child.dataType}")
+  override def inputTypes = Seq(InputTypes.floatOrDoubleArray)
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val isFloat = child.dataType.asInstanceOf[ArrayType].elementType == FloatType
@@ -437,17 +393,9 @@ case class QuantizeInt8(child: Expression)
   * predicates on either dimension. The kernel is one per-row loop; the
   * equivalent composed form is 32 shift/mask/or terms. */
 case class ZOrder2(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = LongType
-  private def intOk(t: DataType): Boolean = t match {
-    case IntegerType | LongType | ShortType | ByteType => true
-    case _ => false
-  }
-  override def checkInputDataTypes() =
-    if (intOk(left.dataType) && intOk(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"zorder2 expects integral inputs, got ${left.dataType}, ${right.dataType}")
+  override def inputTypes = Seq(InputTypes.integral, InputTypes.integral)
   private def toLong(v: Any): Long = v match {
     case i: Int => i.toLong
     case l: Long => l
@@ -486,13 +434,9 @@ case class ZOrder2(left: Expression, right: Expression)
   * denominator 30·|a|·|b|·m — never within 1e-10 of a half-ppm
   * boundary for realistic string lengths). */
 case class JaroWinklerPpm(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = LongType
-  override def checkInputDataTypes() =
-    if (left.dataType == StringType && right.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"jaro_winkler_ppm expects (string, string), got ${left.dataType}, ${right.dataType}")
+  override def inputTypes = Seq(StringType, StringType)
   override def nullSafeEval(l: Any, r: Any): Any = {
     val s1 = l.asInstanceOf[UTF8String].toString
     val s2 = r.asInstanceOf[UTF8String].toString
@@ -553,13 +497,9 @@ case class JaroWinklerPpm(left: Expression, right: Expression)
   * clusters. One JDK Normalizer call per row; DuckDB's independent
   * `nfc_normalize` (utf8proc) is the oracle. */
 case class NfcNormalize(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StringType
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"nfc_normalize expects string, got ${child.dataType}")
+  override def inputTypes = Seq(StringType)
   override def nullSafeEval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString
     UTF8String.fromString(
@@ -578,13 +518,9 @@ case class NfcNormalize(child: Expression)
   * (utf8proc) on Latin-script text — two independent implementations
   * of the same UAX #15 + Mn-filter pipeline. */
 case class StripAccents(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StringType
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"strip_accents expects string, got ${child.dataType}")
+  override def inputTypes = Seq(StringType)
   override def nullSafeEval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString
     val nfd = java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFD)
@@ -618,18 +554,14 @@ case class StripAccents(child: Expression)
   * in O(1) ((h − c_out·B^(k−1))·B + c_in mod M), so a document costs
   * O(chars), not O(chars·k). */
 case class WinnowFingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   require(k >= 2 && w >= 1, s"need k >= 2, w >= 1, got k=$k w=$w")
   private val M = 2147483647L // 2^31 − 1
   private val B = 257L
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("pos", IntegerType, nullable = false),
     StructField("hash", LongType, nullable = false))), containsNull = false)
-  override def checkInputDataTypes() = child.dataType match {
-    case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"winnow_fingerprints expects string input, got $other")
-  }
+  override def inputTypes = Seq(StringType)
   override def nullSafeEval(input: Any): Any = {
     // roll over Unicode CODE POINTS, not UTF-16 code units: the DuckDB
     // oracle hashes per-character code points (ascii(substr(...))), and
@@ -694,7 +626,7 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int)
   * O(n²) in java.util.regex — cap input length upstream if that
   * adversarial shape matters at corpus scale.) */
 case class StripHtml(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   // alternation, NOT a backreference: the oracle replays this pattern
   // in DuckDB's RE2, which has no backreferences
   @transient private lazy val scriptStyle = java.util.regex.Pattern.compile(
@@ -702,11 +634,7 @@ case class StripHtml(child: Expression)
   @transient private lazy val tags = java.util.regex.Pattern.compile("<[^>]*>")
   @transient private lazy val ws = java.util.regex.Pattern.compile("\\s+")
   override def dataType: DataType = StringType
-  override def checkInputDataTypes() = child.dataType match {
-    case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"strip_html expects string input, got $other")
-  }
+  override def inputTypes = Seq(StringType)
   override def nullSafeEval(input: Any): Any = {
     var s = input.asInstanceOf[UTF8String].toString
     s = scriptStyle.matcher(s).replaceAll(" ")
@@ -726,13 +654,9 @@ case class StripHtml(child: Expression)
   * of reading real corpora (WARC records, compressed JSON fields)
   * where payloads arrive gzipped PER RECORD rather than per file. */
 case class GzipCompress(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"gzip_compress expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any = {
     val b = input.asInstanceOf[Array[Byte]]
     val bos = new java.io.ByteArrayOutputStream()
@@ -753,15 +677,11 @@ case class GzipCompress(child: Expression)
   * treated as malformed (null), which turns a zip bomb into a routed
   * row rather than an executor OOM. */
 case class GzipDecompress(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   private val MaxOut = 1 << 26 // 64 MiB
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"gzip_decompress expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any = {
     val b = input.asInstanceOf[Array[Byte]]
     try {
@@ -798,17 +718,12 @@ case class GzipDecompress(child: Expression)
   * ambiguity. Exactly 64 dims required — the sketch is a fixed-width
   * contract, not a best-effort hash; null for null/short vectors. */
 case class SignSketch(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("lo", LongType, nullable = false),
     StructField("hi", LongType, nullable = false)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"sign_sketch expects array<float|double>, got $other")
-  }
+  override def inputTypes = Seq(InputTypes.floatOrDoubleArray)
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     if (arr.numElements() != 64) return null

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -24,17 +24,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * position), so the automaton's transitions are value-verified
   * against the naive definition. */
 case class MultiMatchCounts(child: Expression, patterns: Seq[String])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   require(patterns.nonEmpty && patterns.forall(_.nonEmpty),
     "patterns must be non-empty strings")
   require(patterns.distinct.size == patterns.size, "duplicate patterns")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes() = child.dataType match {
-    case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"multi_match_counts expects string input, got $other")
-  }
+  override def inputTypes = Seq(StringType)
 
   /** goto as per-node code-point maps, fail links, and per-node
     * matched-pattern index lists (output function, closed over fail). */

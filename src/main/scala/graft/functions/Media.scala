@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -210,17 +210,13 @@ object MediaHeaders {
   * unrecognized/truncated containers (PERMISSIVE — callers route
   * unparseable blobs like the codec path routes decode failures). */
 case class ImageDims(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("format", StringType, nullable = false),
     StructField("width", IntegerType, nullable = false),
     StructField("height", IntegerType, nullable = false)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"image_dims expects binary, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     MediaHeaders.parse(input.asInstanceOf[Array[Byte]]) match {
       case Some((fmt, w, h)) =>
@@ -236,18 +232,14 @@ case class ImageDims(child: Expression)
   * n_frames>; null for unrecognized/truncated RIFF containers
   * (PERMISSIVE, like image_dims). */
 case class AudioMeta(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("channels", IntegerType, nullable = false),
     StructField("sample_rate", IntegerType, nullable = false),
     StructField("bits", IntegerType, nullable = false),
     StructField("n_frames", LongType, nullable = false)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"audio_meta expects binary, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     MediaHeaders.parseWav(input.asInstanceOf[Array[Byte]]) match {
       case Some((ch, rate, bits, frames)) =>
@@ -263,7 +255,7 @@ case class AudioMeta(child: Expression)
   * us_per_frame>; null for unrecognized/truncated RIFF-AVI containers
   * (PERMISSIVE, like image_dims/audio_meta). */
 case class VideoMeta(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("width", IntegerType, nullable = false),
     StructField("height", IntegerType, nullable = false),
@@ -271,11 +263,7 @@ case class VideoMeta(child: Expression)
     StructField("n_frames", LongType, nullable = false),
     StructField("us_per_frame", LongType, nullable = false)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"video_meta expects binary, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     MediaHeaders.parseAvi(input.asInstanceOf[Array[Byte]]) match {
       case Some((w, h, st, frames, uspf)) =>
@@ -389,17 +377,13 @@ object Pgm {
   * of every pixel (sums exact, so the oracle can replay them; callers
   * derive mean/contrast arithmetically). Null for non-PGM payloads. */
 case class ImageStats(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("width", IntegerType), StructField("height", IntegerType),
     StructField("n_px", LongType), StructField("px_sum", LongType),
     StructField("px_min", IntegerType), StructField("px_max", IntegerType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"image_stats expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any = {
     val b = input.asInstanceOf[Array[Byte]]
     Pgm.parse(b) match {
@@ -421,15 +405,11 @@ case class ImageStats(child: Expression)
   * of a multimodal ingest pipeline, exact enough for an oracle to
   * replay. Null for non-PGM input or when a dimension collapses to 0. */
 case class ImageDownsample(child: Expression, factor: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   require(factor >= 1, s"factor must be >= 1, got $factor")
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"image_downsample expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any = {
     val b = input.asInstanceOf[Array[Byte]]
     Pgm.parse(b) match {
@@ -482,17 +462,13 @@ case class ImageDownsample(child: Expression, factor: Int)
   * wrapped statistic — loud absence over wrong numbers.
   * Null for any other sample width or a malformed container. */
 case class AudioStats(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("n_samples", LongType), StructField("sum_abs", LongType),
     StructField("sum_sq", LongType), StructField("peak", IntegerType),
     StructField("zero_crossings", LongType), StructField("clip_count", LongType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"audio_stats expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any = {
     val b = input.asInstanceOf[Array[Byte]]
     MediaHeaders.parseWav(b) match {
@@ -546,15 +522,9 @@ case class AudioStats(child: Expression)
   * over a generate_series grid). */
 case class SynthPgm(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_pgm expects (long id, int w, int h), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType)
   override def nullSafeEval(idA: Any, wA: Any, hA: Any): Any = {
     val id = idA.asInstanceOf[Long]
     val w = wA.asInstanceOf[Int]; val h = hA.asInstanceOf[Int]
@@ -573,14 +543,9 @@ case class SynthPgm(first: Expression, second: Expression, third: Expression)
   * the oracle replays over generate_series. */
 case class SynthWavPcm(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-    case (LongType, IntegerType) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"synth_wav_pcm expects (long id, int n), got $other")
-  }
+  override def inputTypes = Seq(LongType, IntegerType)
   override def nullSafeEval(idA: Any, nA: Any): Any = {
     val id = idA.asInstanceOf[Long]; val n = nA.asInstanceOf[Int]
     require(n > 0 && n <= (1 << 20), s"synth_wav_pcm n out of range: $n")
@@ -623,16 +588,11 @@ case class SynthWavPcm(left: Expression, right: Expression)
   * s + 128 on the wire). */
 case class SynthWavBits(left: Expression, right: Expression, bits: Int)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   require(bits == 8 || bits == 16 || bits == 24,
     s"synth_wav_bits supports 8/16/24-bit PCM, got $bits")
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-    case (LongType, IntegerType) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"synth_wav_bits expects (long id, int n), got $other")
-  }
+  override def inputTypes = Seq(LongType, IntegerType)
   override def nullSafeEval(idA: Any, nA: Any): Any = {
     val id = idA.asInstanceOf[Long]; val n = nA.asInstanceOf[Int]
     require(n > 0 && n <= (1 << 20), s"synth_wav_bits n out of range: $n")
@@ -1435,15 +1395,9 @@ object Gif {
   * zlib: the engine proves decode(deflate(filter(px))) == px. */
 case class SynthPng(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_png expects (long id, int w, int h), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType)
   override def nullSafeEval(idA: Any, wA: Any, hA: Any): Any = {
     val id = idA.asInstanceOf[Long]
     val w = wA.asInstanceOf[Int]; val h = hA.asInstanceOf[Int]
@@ -1462,17 +1416,13 @@ case class SynthPng(first: Expression, second: Expression, third: Expression)
   * INFLATE, full five-filter reconstruction. Null for anything that is
   * not a well-formed grayscale-8 PNG. */
 case class PngStats(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("width", IntegerType), StructField("height", IntegerType),
     StructField("n_px", LongType), StructField("px_sum", LongType),
     StructField("px_min", IntegerType), StructField("px_max", IntegerType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"png_stats expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Png.decode(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -1493,15 +1443,9 @@ case class PngStats(child: Expression)
   * interleave or the 3-byte filter offset cannot round-trip. */
 case class SynthPngRgb(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_png_rgb expects (long id, int w, int h), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType)
   override def nullSafeEval(idA: Any, wA: Any, hA: Any): Any = {
     val id = idA.asInstanceOf[Long]
     val w = wA.asInstanceOf[Int]; val h = hA.asInstanceOf[Int]
@@ -1534,15 +1478,9 @@ case class SynthPngRgb(first: Expression, second: Expression, third: Expression)
   * replays decoded RGB by composing the two congruences). */
 case class SynthPngPal(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_png_pal expects (long id, int w, int h), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType)
   override def nullSafeEval(idA: Any, wA: Any, hA: Any): Any = {
     val id = idA.asInstanceOf[Long]
     val w = wA.asInstanceOf[Int]; val h = hA.asInstanceOf[Int]
@@ -1572,7 +1510,7 @@ case class SynthPngPal(first: Expression, second: Expression, third: Expression)
   * px_min/px_max/px_sum range over every decoded byte (alpha
   * included). Null for anything [[Png.decodeFull]] rejects. */
 case class PngStatsRgb(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("width", IntegerType), StructField("height", IntegerType),
     StructField("channels", IntegerType), StructField("n_px", LongType),
@@ -1581,11 +1519,7 @@ case class PngStatsRgb(child: Expression)
     StructField("a_sum", LongType),
     StructField("px_min", IntegerType), StructField("px_max", IntegerType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"png_stats_rgb expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Png.decodeFull(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -1623,15 +1557,9 @@ case class PngStatsRgb(child: Expression)
 case class SynthGif(first: Expression, second: Expression, third: Expression,
     interlaced: Boolean)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_gif expects (long id, int w, int h), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType)
   override def nullSafeEval(idA: Any, wA: Any, hA: Any): Any = {
     val id = idA.asInstanceOf[Long]
     val w = wA.asInstanceOf[Int]; val h = hA.asInstanceOf[Int]
@@ -1657,7 +1585,7 @@ case class SynthGif(first: Expression, second: Expression, third: Expression,
   * from a REAL GIF decode — LZW decompression, color-table expansion,
   * de-interlacing. Null for anything [[Gif.decode]] rejects. */
 case class GifStats(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("width", IntegerType), StructField("height", IntegerType),
     StructField("n_px", LongType), StructField("px_sum", LongType),
@@ -1665,11 +1593,7 @@ case class GifStats(child: Expression)
     StructField("b_sum", LongType),
     StructField("px_min", IntegerType), StructField("px_max", IntegerType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"gif_stats expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Gif.decode(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -1693,15 +1617,9 @@ case class GifStats(child: Expression)
   * proves the de-interlace scatter is exact. */
 case class SynthPngAdam7(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_png_adam7 expects (long id, int w, int h), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType)
   override def nullSafeEval(idA: Any, wA: Any, hA: Any): Any = {
     val id = idA.asInstanceOf[Long]
     val w = wA.asInstanceOf[Int]; val h = hA.asInstanceOf[Int]
@@ -1720,15 +1638,9 @@ case class SynthPngAdam7(first: Expression, second: Expression, third: Expressio
   * four distinct planes through the widest filter offset. */
 case class SynthPngRgba(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_png_rgba expects (long id, int w, int h), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType)
   override def nullSafeEval(idA: Any, wA: Any, hA: Any): Any = {
     val id = idA.asInstanceOf[Long]
     val w = wA.asInstanceOf[Int]; val h = hA.asInstanceOf[Int]
@@ -3614,15 +3526,9 @@ object Jpeg {
   * integer arithmetic over a generate_series grid. */
 case class SynthJpeg(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_jpeg expects (long id, int w, int h), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType)
   override def nullSafeEval(idA: Any, wA: Any, hA: Any): Any = {
     val id = idA.asInstanceOf[Long]
     val w = wA.asInstanceOf[Int]; val h = hA.asInstanceOf[Int]
@@ -3652,17 +3558,13 @@ case class SynthJpeg(first: Expression, second: Expression, third: Expression)
   * entropy decode with unstuffing, dequantize, IDCT. Null for anything
   * that is not a baseline grayscale JPEG. */
 case class JpegStats(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("width", IntegerType), StructField("height", IntegerType),
     StructField("n_px", LongType), StructField("px_sum", LongType),
     StructField("px_min", IntegerType), StructField("px_max", IntegerType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"jpeg_stats expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Jpeg.decode(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -3684,15 +3586,9 @@ case class JpegStats(child: Expression)
   * exactly invertible (DC-only spectra, see [[Jpeg]]). */
 case class SynthJpegRgb(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_jpeg_rgb expects (long id, int w, int h), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType)
   override def nullSafeEval(idA: Any, wA: Any, hA: Any): Any = {
     val id = idA.asInstanceOf[Long]
     val w = wA.asInstanceOf[Int]; val h = hA.asInstanceOf[Int]
@@ -3727,7 +3623,7 @@ case class SynthJpegRgb(first: Expression, second: Expression, third: Expression
   * three channel slots (the png_stats_rgb convention). Null for
   * anything [[Jpeg.decodeFull]] rejects. */
 case class JpegStatsRgb(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("width", IntegerType), StructField("height", IntegerType),
     StructField("channels", IntegerType), StructField("n_px", LongType),
@@ -3735,11 +3631,7 @@ case class JpegStatsRgb(child: Expression)
     StructField("g_sum", LongType), StructField("b_sum", LongType),
     StructField("px_min", IntegerType), StructField("px_max", IntegerType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"jpeg_stats_rgb expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Jpeg.decodeFull(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -3769,15 +3661,9 @@ case class JpegStatsRgb(child: Expression)
   * the subsampled codec stays oracle-replayable. */
 case class SynthJpeg420(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_jpeg_420 expects (long id, int w, int h), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType)
   override def nullSafeEval(idA: Any, wA: Any, hA: Any): Any = {
     val id = idA.asInstanceOf[Long]
     val w = wA.asInstanceOf[Int]; val h = hA.asInstanceOf[Int]
@@ -3812,15 +3698,9 @@ case class SynthJpeg420(first: Expression, second: Expression, third: Expression
   * forward ∘ codec-identity ∘ inverse with integer arithmetic. */
 case class SynthJpegYcbcr(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_jpeg_ycbcr expects (long id, int w, int h), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType)
   override def nullSafeEval(idA: Any, wA: Any, hA: Any): Any = {
     val id = idA.asInstanceOf[Long]
     val w = wA.asInstanceOf[Int]; val h = hA.asInstanceOf[Int]
@@ -3854,7 +3734,7 @@ case class SynthJpegYcbcr(first: Expression, second: Expression, third: Expressi
   * Grayscale passes through (Y is the gray plane, reported in all
   * three slots). Null for anything the decoder rejects. */
 case class JpegStatsYcbcr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("width", IntegerType), StructField("height", IntegerType),
     StructField("channels", IntegerType), StructField("n_px", LongType),
@@ -3862,11 +3742,7 @@ case class JpegStatsYcbcr(child: Expression)
     StructField("g_sum", LongType), StructField("b_sum", LongType),
     StructField("px_min", IntegerType), StructField("px_max", IntegerType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"jpeg_stats_ycbcr expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Jpeg.decodeToRgb(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -3893,15 +3769,9 @@ case class JpegStatsYcbcr(child: Expression)
   * the byte-level filter chain. */
 case class SynthPng16(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_png16 expects (long id, int w, int h), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType)
   override def nullSafeEval(idA: Any, wA: Any, hA: Any): Any = {
     val id = idA.asInstanceOf[Long]
     val w = wA.asInstanceOf[Int]; val h = hA.asInstanceOf[Int]
@@ -3933,18 +3803,14 @@ case class SynthPng16(first: Expression, second: Expression, third: Expression)
   * anything the decoder rejects (8-bit containers included: this
   * expression is the 16-bit gate). */
 case class PngStats16(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("width", IntegerType), StructField("height", IntegerType),
     StructField("channels", IntegerType), StructField("n_samples", LongType),
     StructField("sample_sum", LongType), StructField("sample_min", IntegerType),
     StructField("sample_max", IntegerType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"png_stats16 expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Png.decode16(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -3976,15 +3842,9 @@ case class PngStats16(child: Expression)
   * forward ∘ identity ∘ inverse integer pipeline as q_jpeg_ycbcr. */
 case class SynthJpegProg(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_jpeg_prog expects (long id, int w, int h), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType)
   override def nullSafeEval(idA: Any, wA: Any, hA: Any): Any = {
     val id = idA.asInstanceOf[Long]
     val w = wA.asInstanceOf[Int]; val h = hA.asInstanceOf[Int]
@@ -4021,15 +3881,9 @@ case class SynthJpegProg(first: Expression, second: Expression, third: Expressio
   * invertible: the oracle replays forward ∘ identity ∘ inverse. */
 case class SynthJpegProg420(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_jpeg_prog420 expects (long id, int w, int h), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType)
   override def nullSafeEval(idA: Any, wA: Any, hA: Any): Any = {
     val id = idA.asInstanceOf[Long]
     val w = wA.asInstanceOf[Int]; val h = hA.asInstanceOf[Int]
@@ -4062,15 +3916,9 @@ case class SynthJpegProg420(first: Expression, second: Expression, third: Expres
   * y·233, all mod 65536) through the 6-byte filter offset. */
 case class SynthPng16Rgb(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_png16_rgb expects (long id, int w, int h), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType)
   override def nullSafeEval(idA: Any, wA: Any, hA: Any): Any = {
     val id = idA.asInstanceOf[Long]
     val w = wA.asInstanceOf[Int]; val h = hA.asInstanceOf[Int]
@@ -4105,7 +3953,7 @@ case class SynthPng16Rgb(first: Expression, second: Expression, third: Expressio
   * channels and s_sum covers everything). Null for anything
   * [[Png.decode16]] rejects. */
 case class PngStats16Rgb(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("width", IntegerType), StructField("height", IntegerType),
     StructField("channels", IntegerType), StructField("n_px", LongType),
@@ -4113,11 +3961,7 @@ case class PngStats16Rgb(child: Expression)
     StructField("g_sum", LongType), StructField("b_sum", LongType),
     StructField("s_min", IntegerType), StructField("s_max", IntegerType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"png_stats16_rgb expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Png.decode16(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -4149,14 +3993,10 @@ case class PngStats16Rgb(child: Expression)
   * mixed web corpus — progressive frames (the majority of real web
   * JPEGs) get ROUTED, not nulled blind. Never throws. */
 case class JpegKind(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StringType
   override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"jpeg_kind expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     UTF8String.fromString(Jpeg.kind(input.asInstanceOf[Array[Byte]]))
   override protected def withNewChildInternal(newChild: Expression): JpegKind =
@@ -4169,14 +4009,10 @@ case class JpegKind(child: Expression)
   * fixture generator (progressive/arithmetic-marked containers from a
   * baseline encode). `sof` is a literal plan constant. */
 case class JpegWithSof(child: Expression, sof: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"jpeg_with_sof expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Jpeg.withSofMarker(input.asInstanceOf[Array[Byte]], sof)
   override protected def withNewChildInternal(newChild: Expression): JpegWithSof =
@@ -4192,15 +4028,9 @@ case class JpegWithSof(child: Expression, sof: Int)
   * color type 4 path. */
 case class SynthPngGa(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_png_ga expects (long id, int w, int h), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType)
   override def nullSafeEval(idA: Any, wA: Any, hA: Any): Any = {
     val id = idA.asInstanceOf[Long]
     val w = wA.asInstanceOf[Int]; val h = hA.asInstanceOf[Int]

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -159,7 +160,7 @@ object Mp3 {
   * kbps_sum, duration_ms, id3v2_bytes, has_id3v1) or null per
   * [[Mp3.meta]]. */
 case class Mp3Meta(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("version", StringType), StructField("sample_rate", IntegerType),
     StructField("n_frames", IntegerType), StructField("cbr", BooleanType),
@@ -167,11 +168,7 @@ case class Mp3Meta(child: Expression)
     StructField("id3v2_bytes", IntegerType),
     StructField("has_id3v1", BooleanType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"mp3_meta expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Mp3.meta(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -186,14 +183,9 @@ case class Mp3Meta(child: Expression)
 
 /** `synth_mp3(id, corrupt)` per [[Mp3.synth]]. */
 case class SynthMp3(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-    case (LongType, BooleanType) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"synth_mp3 expects (long, boolean), got $other")
-  }
+  override def inputTypes = Seq(LongType, BooleanType)
   override def nullSafeEval(id: Any, c: Any): Any =
     Mp3.synth(id.asInstanceOf[Long], c.asInstanceOf[Boolean])
   override protected def withNewChildrenInternal(l: Expression,

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -565,7 +566,7 @@ object Mp4 {
   * timescale, duration, duration_ms, n_tracks, handlers, mdat_bytes)
   * or null per [[Mp4.meta]]. */
 case class Mp4Meta(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("major_brand", StringType),
     StructField("minor_version", LongType),
@@ -577,11 +578,7 @@ case class Mp4Meta(child: Expression)
     StructField("handlers", StringType),
     StructField("mdat_bytes", LongType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"mp4_meta expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Mp4.meta(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -601,7 +598,7 @@ case class Mp4Meta(child: Expression)
   * media_timescale, media_duration, lang, n_samples, sample_bytes,
   * n_chunks, tkhd_duration) per [[Mp4.tracks]], or null. */
 case class Mp4Tracks(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   private val trackType = StructType(Seq(
     StructField("track_id", LongType), StructField("handler", StringType),
     StructField("codec", StringType),
@@ -617,11 +614,7 @@ case class Mp4Tracks(child: Expression)
     StructField("edit_duration_sum", LongType)))
   override def dataType: DataType = ArrayType(trackType)
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"mp4_tracks expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Mp4.tracks(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -645,14 +638,9 @@ case class Mp4Tracks(child: Expression)
 
 /** `synth_mp4(id, corrupt)` per [[Mp4.synth]]. */
 case class SynthMp4(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-    case (LongType, BooleanType) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"synth_mp4 expects (long, boolean) input, got $other")
-  }
+  override def inputTypes = Seq(LongType, BooleanType)
   override def nullSafeEval(id: Any, corrupt: Any): Any =
     Mp4.synth(id.asInstanceOf[Long], corrupt.asInstanceOf[Boolean])
   override protected def withNewChildrenInternal(newLeft: Expression,

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -248,7 +249,7 @@ object Ogg {
   * payload_bytes, max_granule, codec, channels, sample_rate, pre_skip)
   * or null per [[Ogg.meta]]; CRC-verified (round-13). */
 case class OggMeta(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("n_pages", IntegerType), StructField("n_streams", IntegerType),
     StructField("n_bos", IntegerType), StructField("n_eos", IntegerType),
@@ -258,11 +259,7 @@ case class OggMeta(child: Expression)
     StructField("sample_rate", LongType),
     StructField("pre_skip", IntegerType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"ogg_meta expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Ogg.meta(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -278,13 +275,9 @@ case class OggMeta(child: Expression)
 /** `synth_ogg_crcbad(id)` — structurally perfect pages, one payload
   * byte flipped AFTER CRC computation (round-13 CRC-routing lane). */
 case class SynthOggCrcBad(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = child.dataType match {
-    case LongType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"synth_ogg_crcbad expects long input, got $other")
-  }
+  override def inputTypes = Seq(LongType)
   override def nullSafeEval(id: Any): Any =
     Ogg.synthCrcBroken(id.asInstanceOf[Long])
   override protected def withNewChildInternal(newChild: Expression): SynthOggCrcBad =
@@ -294,14 +287,9 @@ case class SynthOggCrcBad(child: Expression)
 
 /** `synth_ogg(id, corrupt)` per [[Ogg.synth]]. */
 case class SynthOgg(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-    case (LongType, BooleanType) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"synth_ogg expects (long, boolean), got $other")
-  }
+  override def inputTypes = Seq(LongType, BooleanType)
   override def nullSafeEval(id: Any, c: Any): Any =
     Ogg.synth(id.asInstanceOf[Long], c.asInstanceOf[Boolean])
   override protected def withNewChildrenInternal(l: Expression,

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -301,7 +302,7 @@ object ParquetFooter {
   * n_row_groups, total_byte_size, created_by) or null per
   * [[ParquetFooter.parse]]. */
 case class ParquetFooterMeta(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("version", IntegerType), StructField("num_rows", LongType),
     StructField("n_columns", IntegerType),
@@ -309,11 +310,7 @@ case class ParquetFooterMeta(child: Expression)
     StructField("total_byte_size", LongType),
     StructField("created_by", StringType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"parquet_footer expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     ParquetFooter.parse(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -328,14 +325,9 @@ case class ParquetFooterMeta(child: Expression)
 
 /** `synth_parquet(id, corrupt)` per [[ParquetFooter.synth]]. */
 case class SynthParquet(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-    case (LongType, BooleanType) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"synth_parquet expects (long, boolean), got $other")
-  }
+  override def inputTypes = Seq(LongType, BooleanType)
   override def nullSafeEval(id: Any, c: Any): Any =
     ParquetFooter.synth(id.asInstanceOf[Long], c.asInstanceOf[Boolean])
   override protected def withNewChildrenInternal(l: Expression,

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -140,7 +140,7 @@ object Proto {
   * varint_sum, n_i64, i64_sum, n_len, len_bytes, n_i32, i32_sum) —
   * the schema-free wire profile, or null on malformed bytes. */
 case class ProtoStats(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("n_fields", IntegerType), StructField("max_field", IntegerType),
     StructField("n_varint", IntegerType), StructField("varint_sum", LongType),
@@ -148,11 +148,7 @@ case class ProtoStats(child: Expression)
     StructField("n_len", IntegerType), StructField("len_bytes", LongType),
     StructField("n_i32", IntegerType), StructField("i32_sum", LongType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"proto_stats expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Proto.profile(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -169,15 +165,9 @@ case class ProtoStats(child: Expression)
 /** `synth_proto(id, corrupt)` -> the seven-field wire message above. */
 case class SynthProto(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (left.dataType, right.dataType) match {
-      case (LongType, BooleanType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_proto expects (long id, boolean corrupt), got $other")
-    }
+  override def inputTypes = Seq(LongType, BooleanType)
   override def nullSafeEval(idA: Any, corruptA: Any): Any =
     Proto.synth(idA.asInstanceOf[Long], corruptA.asInstanceOf[Boolean])
   override protected def withNewChildrenInternal(l: Expression, r: Expression): SynthProto =

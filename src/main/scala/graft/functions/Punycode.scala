@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -182,14 +182,10 @@ object Punycode {
 /** `idna_decode(host)` -> the Unicode hostname, or null when any
   * xn-- label is invalid punycode. */
 case class IdnaDecode(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"idna_decode expects string input, got $other")
-  }
+  override def inputTypes = Seq(StringType)
   override def nullSafeEval(input: Any): Any =
     Punycode.idnaDecode(input.asInstanceOf[UTF8String].toString) match {
       case Some(s) => UTF8String.fromString(s)

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -194,15 +194,9 @@ object Qoi {
 case class SynthQoi(first: Expression, second: Expression,
     third: Expression, fourth: Expression)
     extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType, fourth.dataType) match {
-      case (LongType, IntegerType, IntegerType, BooleanType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_qoi expects (long id, int w, int h, boolean rgba), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType, BooleanType)
   override def nullSafeEval(idA: Any, wA: Any, hA: Any, rgbaA: Any): Any = {
     val id = idA.asInstanceOf[Long]
     val w = wA.asInstanceOf[Int]; val h = hA.asInstanceOf[Int]
@@ -242,7 +236,7 @@ case class SynthQoi(first: Expression, second: Expression,
   * containers, whose decode never materializes an alpha byte). Null
   * for anything [[Qoi.decode]] rejects. */
 case class QoiStats(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("width", IntegerType), StructField("height", IntegerType),
     StructField("channels", IntegerType), StructField("n_px", LongType),
@@ -251,11 +245,7 @@ case class QoiStats(child: Expression)
     StructField("a_sum", LongType),
     StructField("px_min", IntegerType), StructField("px_max", IntegerType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"qoi_stats expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Qoi.decode(input.asInstanceOf[Array[Byte]]) match {
       case None => null

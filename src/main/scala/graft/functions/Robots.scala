@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -158,7 +158,7 @@ object Robots {
   * robots.txt was served — everything allowed. */
 case class RobotsDecision(first: Expression, second: Expression,
     third: Expression)
-    extends TernaryExpression with CodegenFallback {
+    extends TernaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("allowed", BooleanType), StructField("rule", StringType)))
   override def nullable: Boolean = false
@@ -176,13 +176,7 @@ case class RobotsDecision(first: Expression, second: Expression,
       pathA.asInstanceOf[UTF8String].toString)
     new GenericInternalRow(Array[Any](allowed, UTF8String.fromString(rule)))
   }
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (StringType, StringType, StringType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"robots_decision expects (string, string, string), got $other")
-    }
+  override def inputTypes = Seq(StringType, StringType, StringType)
   override protected def withNewChildrenInternal(f: Expression, s: Expression,
       t: Expression): RobotsDecision = copy(first = f, second = s, third = t)
   override def prettyName: String = "robots_decision"

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Generator}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -197,7 +197,7 @@ object Tar {
   * terminal null row, like [[WarcRecords]] — tar's size field IS the
   * framing. Empty blob -> no rows. */
 case class TarEntries(child: Expression)
-    extends Generator with CodegenFallback {
+    extends Generator with CodegenFallback with ExpectsInputTypes {
   override def children: Seq[Expression] = Seq(child)
   override def elementSchema: StructType = StructType(Seq(
     StructField("entry_idx", IntegerType, nullable = false),
@@ -206,11 +206,7 @@ case class TarEntries(child: Expression)
     StructField("size", LongType, nullable = true),
     StructField("payload", BinaryType, nullable = true),
     StructField("ok", BooleanType, nullable = false)))
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"tar_entries expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
     if (v == null) return Iterator.empty
@@ -233,15 +229,9 @@ case class TarEntries(child: Expression)
 /** `synth_tar(id, n, corrupt)` -> [[Tar.synth]] fixture. */
 case class SynthTar(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, BooleanType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_tar expects (long id, int n, boolean corrupt), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, BooleanType)
   override def nullSafeEval(idA: Any, nA: Any, cA: Any): Any =
     Tar.synth(idA.asInstanceOf[Long], nA.asInstanceOf[Int],
       cA.asInstanceOf[Boolean])

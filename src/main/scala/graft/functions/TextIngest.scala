@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -184,13 +184,9 @@ object TextIngest {
 
 /** `charset_sniff(binary)` -> string label per [[TextIngest.sniff]]. */
 case class CharsetSniff(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StringType
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"charset_sniff expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     UTF8String.fromString(TextIngest.sniff(input.asInstanceOf[Array[Byte]]))
   override protected def withNewChildInternal(newChild: Expression): CharsetSniff =
@@ -201,13 +197,9 @@ case class CharsetSniff(child: Expression)
 /** `html_entity_decode(string)` -> string per
   * [[TextIngest.decodeEntities]]. */
 case class HtmlEntityDecode(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StringType
-  override def checkInputDataTypes() = child.dataType match {
-    case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"html_entity_decode expects string input, got $other")
-  }
+  override def inputTypes = Seq(StringType)
   override def nullSafeEval(input: Any): Any =
     UTF8String.fromString(
       TextIngest.decodeEntities(input.asInstanceOf[UTF8String].toString))
@@ -218,13 +210,9 @@ case class HtmlEntityDecode(child: Expression)
 
 /** `qp_decode(string)` per [[TextIngest.decodeQuotedPrintable]]. */
 case class QpDecode(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StringType
-  override def checkInputDataTypes() = child.dataType match {
-    case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"qp_decode expects string input, got $other")
-  }
+  override def inputTypes = Seq(StringType)
   override def nullSafeEval(input: Any): Any =
     UTF8String.fromString(TextIngest.decodeQuotedPrintable(
       input.asInstanceOf[UTF8String].toString))

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -241,18 +241,12 @@ object Tiff {
   * so every container is multi-strip — the offset/count arrays and
   * their endianness handling are value-checked, not just parsed. */
 case class SynthTiff(children: Seq[Expression])
-    extends Expression with CodegenFallback {
+    extends Expression with CodegenFallback with ExpectsInputTypes {
   require(children.length == 5, "synth_tiff takes 5 args")
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = false
   override def foldable: Boolean = children.forall(_.foldable)
-  override def checkInputDataTypes() =
-    children.map(_.dataType) match {
-      case Seq(LongType, IntegerType, IntegerType, BooleanType, BooleanType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_tiff expects (long id, int w, int h, boolean rgb, boolean big_endian), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType, BooleanType, BooleanType)
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val vs = children.map(_.eval(input))
     if (vs.exists(_ == null)) return null
@@ -292,7 +286,7 @@ case class SynthTiff(children: Seq[Expression])
   * reports its plane as r_sum with g_sum = b_sum = 0. Null for
   * anything [[Tiff.decode]] rejects. */
 case class TiffStats(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("width", IntegerType), StructField("height", IntegerType),
     StructField("channels", IntegerType), StructField("n_px", LongType),
@@ -300,11 +294,7 @@ case class TiffStats(child: Expression)
     StructField("g_sum", LongType), StructField("b_sum", LongType),
     StructField("px_min", IntegerType), StructField("px_max", IntegerType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"tiff_stats expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Tiff.decode(input.asInstanceOf[Array[Byte]]) match {
       case None => null

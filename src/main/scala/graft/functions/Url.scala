@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -96,18 +96,14 @@ object Url {
 /** `url_parse(string)` -> struct(scheme, host, port, path, query,
   * fragment, normalized) per [[Url]]'s pinned subset, or null. */
 case class UrlParse(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("scheme", StringType), StructField("host", StringType),
     StructField("port", IntegerType), StructField("path", StringType),
     StructField("query", StringType), StructField("fragment", StringType),
     StructField("normalized", StringType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"url_parse expects string input, got $other")
-  }
+  override def inputTypes = Seq(StringType)
   override def nullSafeEval(input: Any): Any =
     Url.parse(input.asInstanceOf[UTF8String].toString) match {
       case None => null
@@ -160,15 +156,9 @@ object PercentDecode {
 /** `percent_decode(string, plus_as_space)` per [[PercentDecode]]. */
 case class PercentDecodeExpr(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StringType
-  override def checkInputDataTypes() =
-    (left.dataType, right.dataType) match {
-      case (StringType, BooleanType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"percent_decode expects (string, boolean), got $other")
-    }
+  override def inputTypes = Seq(StringType, BooleanType)
   override def nullSafeEval(sA: Any, pA: Any): Any =
     UTF8String.fromString(PercentDecode.decode(
       sA.asInstanceOf[UTF8String].toString, pA.asInstanceOf[Boolean]))

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -100,18 +100,14 @@ object Utf8 {
   * n_ascii, n_2byte, n_3byte, n_4byte) under the WHATWG decoder with
   * maximal-subpart substitution (see [[Utf8]]). */
 case class Utf8Stats(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("valid", BooleanType), StructField("n_chars", LongType),
     StructField("n_replacements", LongType), StructField("n_ascii", LongType),
     StructField("n_2byte", LongType), StructField("n_3byte", LongType),
     StructField("n_4byte", LongType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"utf8_stats expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any = {
     val (valid, nChars, repl, a, b2, b3, b4, _) =
       Utf8.scan(input.asInstanceOf[Array[Byte]], build = false)
@@ -127,13 +123,9 @@ case class Utf8Stats(child: Expression)
   * that makes arbitrary crawled bytes safe for the string pipeline.
   * Total (never null, never throws): every byte sequence decodes. */
 case class Utf8Sanitize(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StringType
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"utf8_sanitize expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any = {
     val (_, _, _, _, _, _, _, s) =
       Utf8.scan(input.asInstanceOf[Array[Byte]], build = true)

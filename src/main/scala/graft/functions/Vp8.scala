@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -1125,7 +1125,7 @@ object Vp8 {
 /** `vp8_stats(binary)` -> struct over the decoded YUV420 planes of a
   * lossy WebP / raw VP8 key frame, or null per [[Vp8.decodeWebp]]. */
 case class Vp8StatsExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("width", IntegerType), StructField("height", IntegerType),
     StructField("y_sum", LongType), StructField("u_sum", LongType),
@@ -1136,11 +1136,7 @@ case class Vp8StatsExpr(child: Expression)
     StructField("has_alpha", BooleanType), StructField("a_sum", LongType),
     StructField("a_md5", StringType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"vp8_stats expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Vp8.stats(input.asInstanceOf[Array[Byte]]) match {
       case None => null

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression,
+  QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -487,16 +488,9 @@ object Vp8Enc {
 /** `synth_vp8(id, w, h, mode)` per [[Vp8Enc.synth]] (raw VP8 frame). */
 case class SynthVp8(first: Expression, second: Expression,
     third: Expression, fourth: Expression)
-    extends QuaternaryExpression with CodegenFallback {
+    extends QuaternaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType, fourth.dataType) match {
-      case (LongType, IntegerType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"synth_vp8 expects (long, int, int, int), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType, IntegerType)
   override def nullSafeEval(id: Any, w: Any, h: Any, mode: Any): Any =
     Vp8Enc.synth(id.asInstanceOf[Long], w.asInstanceOf[Int],
       h.asInstanceOf[Int], mode.asInstanceOf[Int])

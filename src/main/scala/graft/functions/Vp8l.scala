@@ -1091,7 +1091,8 @@ object Vp8l {
   * pixel decode, or null per [[Vp8l.decode]]. */
 case class Vp8lStats(child: org.apache.spark.sql.catalyst.expressions.Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    with org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
   import org.apache.spark.sql.types._
   override def dataType: DataType = StructType(Seq(
     StructField("width", IntegerType), StructField("height", IntegerType),
@@ -1100,13 +1101,7 @@ case class Vp8lStats(child: org.apache.spark.sql.catalyst.expressions.Expression
     StructField("b_sum", LongType), StructField("a_sum", LongType),
     StructField("px_min", IntegerType), StructField("px_max", IntegerType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"vp8l_stats expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Vp8l.stats(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -1129,17 +1124,11 @@ case class SynthVp8l(first: org.apache.spark.sql.catalyst.expressions.Expression
     third: org.apache.spark.sql.catalyst.expressions.Expression,
     fourth: org.apache.spark.sql.catalyst.expressions.Expression)
     extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    with org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
   import org.apache.spark.sql.types._
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType, fourth.dataType) match {
-      case (LongType, IntegerType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"synth_vp8l expects (long, int, int, int), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType, IntegerType)
   override def nullSafeEval(id: Any, w: Any, h: Any, m: Any): Any = {
     val mode = m.asInstanceOf[Int]
     Vp8l.synth(id.asInstanceOf[Long], w.asInstanceOf[Int],

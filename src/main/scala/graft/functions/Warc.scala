@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Generator}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -223,7 +223,7 @@ object Warc {
   * generates no rows (explode semantics). Runs inside GenerateExec —
   * per-partition streaming, no shuffle, planner-prunable. */
 case class WarcRecords(child: Expression)
-    extends Generator with CodegenFallback {
+    extends Generator with CodegenFallback with ExpectsInputTypes {
   override def children: Seq[Expression] = Seq(child)
   override def elementSchema: StructType = StructType(Seq(
     StructField("rec_idx", IntegerType, nullable = false),
@@ -232,11 +232,7 @@ case class WarcRecords(child: Expression)
     StructField("content_length", LongType, nullable = true),
     StructField("payload", BinaryType, nullable = true),
     StructField("ok", BooleanType, nullable = false)))
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"warc_records expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
     if (v == null) return Iterator.empty
@@ -280,15 +276,9 @@ case class WarcRecords(child: Expression)
   * deterministic malformed fixture the oracle can account for). */
 case class SynthWarc(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, BooleanType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_warc expects (long id, int n, boolean corrupt_last), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, BooleanType)
   override def nullSafeEval(idA: Any, nA: Any, cA: Any): Any =
     Warc.synth(idA.asInstanceOf[Long], nA.asInstanceOf[Int],
       cA.asInstanceOf[Boolean])

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -200,7 +201,7 @@ object Webm {
 
 /** `webm_meta(binary)` per [[Webm.meta]], or null. */
 case class WebmMeta(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("doc_type", StringType),
     StructField("doc_type_version", LongType),
@@ -209,11 +210,7 @@ case class WebmMeta(child: Expression)
     StructField("n_audio", IntegerType), StructField("codecs", StringType),
     StructField("n_clusters", IntegerType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"webm_meta expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Webm.meta(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -229,14 +226,9 @@ case class WebmMeta(child: Expression)
 
 /** `synth_webm(id, corrupt)` per [[Webm.synth]]. */
 case class SynthWebm(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-    case (LongType, BooleanType) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"synth_webm expects (long, boolean), got $other")
-  }
+  override def inputTypes = Seq(LongType, BooleanType)
   override def nullSafeEval(id: Any, c: Any): Any =
     Webm.synth(id.asInstanceOf[Long], c.asInstanceOf[Boolean])
   override protected def withNewChildrenInternal(l: Expression,

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -197,7 +197,7 @@ object Webp {
   * has_anim, n_chunks, n_frames, loop_count, anim_ms) or null per
   * [[Webp.meta]]. */
 case class WebpMeta(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("kind", StringType), StructField("width", IntegerType),
     StructField("height", IntegerType), StructField("has_alpha", BooleanType),
@@ -205,11 +205,7 @@ case class WebpMeta(child: Expression)
     StructField("n_frames", IntegerType), StructField("loop_count", IntegerType),
     StructField("anim_ms", LongType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"webp_meta expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     Webp.meta(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -226,15 +222,9 @@ case class WebpMeta(child: Expression)
 case class SynthWebp(first: Expression, second: Expression,
     third: Expression, fourth: Expression)
     extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType, fourth.dataType) match {
-      case (LongType, IntegerType, IntegerType, BooleanType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_webp expects (long, int, int, boolean), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, IntegerType, BooleanType)
   override def nullSafeEval(id: Any, w: Any, h: Any, c: Any): Any =
     Webp.synth(id.asInstanceOf[Long], w.asInstanceOf[Int],
       h.asInstanceOf[Int], c.asInstanceOf[Boolean])

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -220,7 +220,7 @@ object WebpAnim {
 /** `webp_anim_frames(binary)` -> array of per-frame structs per
   * [[WebpAnim.frames]], or null. */
 case class WebpAnimFrames(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   private val frameType = StructType(Seq(
     StructField("idx", IntegerType), StructField("x", IntegerType),
     StructField("y", IntegerType), StructField("w", IntegerType),
@@ -230,11 +230,7 @@ case class WebpAnimFrames(child: Expression)
     StructField("md5", StringType), StructField("a_sum", LongType)))
   override def dataType: DataType = ArrayType(frameType)
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"webp_anim_frames expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     WebpAnim.frames(input.asInstanceOf[Array[Byte]]) match {
       case None => null

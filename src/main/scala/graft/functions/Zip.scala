@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Generator}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -193,7 +193,7 @@ object Zip {
   * [[WarcRecords]]); an unreadable container yields one terminal
   * null row. Empty blob -> no rows. Runs inside GenerateExec. */
 case class ZipEntries(child: Expression)
-    extends Generator with CodegenFallback {
+    extends Generator with CodegenFallback with ExpectsInputTypes {
   override def children: Seq[Expression] = Seq(child)
   override def elementSchema: StructType = StructType(Seq(
     StructField("entry_idx", IntegerType, nullable = false),
@@ -202,11 +202,7 @@ case class ZipEntries(child: Expression)
     StructField("usize", LongType, nullable = true),
     StructField("payload", BinaryType, nullable = true),
     StructField("ok", BooleanType, nullable = false)))
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"zip_entries expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
     if (v == null) return Iterator.empty
@@ -244,15 +240,9 @@ case class ZipEntries(child: Expression)
 /** `synth_zip(id, n, corrupt_first)` -> [[Zip.synth]] fixture. */
 case class SynthZip(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
+    with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (LongType, IntegerType, BooleanType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"synth_zip expects (long id, int n, boolean corrupt_first), got $other")
-    }
+  override def inputTypes = Seq(LongType, IntegerType, BooleanType)
   override def nullSafeEval(idA: Any, nA: Any, cA: Any): Any =
     Zip.synth(idA.asInstanceOf[Long], nA.asInstanceOf[Int],
       cA.asInstanceOf[Boolean])

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -160,16 +160,12 @@ object Zstd {
 /** `zstd_frame_meta(binary)` -> struct(kind, single_segment, checksum,
   * dict_id, window_size, content_size) per [[Zstd.frameMeta]]. */
 case class ZstdFrameMeta(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("kind", StringType), StructField("single_segment", BooleanType),
     StructField("checksum", BooleanType), StructField("dict_id", LongType),
     StructField("window_size", LongType), StructField("content_size", LongType)))
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"zstd_frame_meta expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any = {
     val m = Zstd.frameMeta(input.asInstanceOf[Array[Byte]])
     new GenericInternalRow(Array[Any](UTF8String.fromString(m.kind),
@@ -185,13 +181,9 @@ case class ZstdFrameMeta(child: Expression)
 /** `synth_zstd(id)` -> a zstd/skippable/non-zstd header per
   * [[Zstd.synth]]. */
 case class SynthZstd(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = child.dataType match {
-    case LongType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"synth_zstd expects long input, got $other")
-  }
+  override def inputTypes = Seq(LongType)
   override def nullSafeEval(input: Any): Any =
     Zstd.synth(input.asInstanceOf[Long])
   override protected def withNewChildInternal(newChild: Expression): SynthZstd =

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -1468,15 +1469,9 @@ object ZstdCodec {
   * (single-segment, content size declared, xxhash64 checksum) per
   * [[ZstdCodec.compress]]. */
 case class ZstdCompress(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-    case (BinaryType, BooleanType) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"zstd_compress expects (binary, boolean) input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType, BooleanType)
   override def nullSafeEval(input: Any, mode: Any): Any =
     ZstdCodec.compress(input.asInstanceOf[Array[Byte]],
       mode.asInstanceOf[Boolean])
@@ -1489,16 +1484,10 @@ case class ZstdCompress(left: Expression, right: Expression)
   * payload is not a well-formed checksum-clean zstd stream
   * (permissive routing per [[ZstdCodec.decompress]]). */
 case class ZstdDecompress(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"zstd_decompress expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     ZstdCodec.decompress(input.asInstanceOf[Array[Byte]]).orNull
   override protected def withNewChildInternal(newChild: Expression): ZstdDecompress =
@@ -1510,15 +1499,9 @@ case class ZstdDecompress(child: Expression)
   * may reach into the RAW dictionary `dict` (predefined sequence
   * tables); decode with `zstd_decompress_dict` and the same bytes. */
 case class ZstdCompressDict(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-    case (BinaryType, BinaryType) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"zstd_compress_dict expects (binary, binary) input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType, BinaryType)
   override def nullSafeEval(input: Any, dict: Any): Any =
     ZstdCodec.compressWithDict(input.asInstanceOf[Array[Byte]],
       dict.asInstanceOf[Array[Byte]])
@@ -1531,16 +1514,10 @@ case class ZstdCompressDict(left: Expression, right: Expression)
 /** `zstd_decompress_dict(binary, dict)` -> decoded bytes using an
   * RFC 8878 §5 dictionary (structured OR raw), or null. */
 case class ZstdDecompressDict(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-    case (BinaryType, BinaryType) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"zstd_decompress_dict expects (binary, binary) input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType, BinaryType)
   override def nullSafeEval(input: Any, dict: Any): Any =
     ZstdCodec.decompressWithDict(input.asInstanceOf[Array[Byte]],
       dict.asInstanceOf[Array[Byte]]).orNull

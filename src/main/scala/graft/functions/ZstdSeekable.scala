@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -129,18 +130,14 @@ object ZstdSeekable {
   * total_decompressed, has_checksums) or null when no valid seek
   * table terminates the payload. */
 case class ZstdSeekMeta(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = StructType(Seq(
     StructField("n_members", IntegerType),
     StructField("total_compressed", LongType),
     StructField("total_decompressed", LongType),
     StructField("has_checksums", BooleanType)))
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = child.dataType match {
-    case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"zstd_seek_meta expects binary input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType)
   override def nullSafeEval(input: Any): Any =
     ZstdSeekable.seekTable(input.asInstanceOf[Array[Byte]]) match {
       case None => null
@@ -157,15 +154,10 @@ case class ZstdSeekMeta(child: Expression)
 /** `zstd_seek_read(binary, idx)` -> member idx's decoded bytes via
   * the seek table (null when absent/corrupt/out of range). */
 case class ZstdSeekRead(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
-  override def checkInputDataTypes() = (left.dataType, right.dataType) match {
-    case (BinaryType, IntegerType) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"zstd_seek_read expects (binary, int) input, got $other")
-  }
+  override def inputTypes = Seq(BinaryType, IntegerType)
   override def nullSafeEval(input: Any, idx: Any): Any =
     ZstdSeekable.read(input.asInstanceOf[Array[Byte]],
       idx.asInstanceOf[Int]).orNull
@@ -177,14 +169,9 @@ case class ZstdSeekRead(left: Expression, right: Expression)
 /** `zstd_seek_pack(array<binary>)` -> a seekable shard of the array's
   * elements (one frame per element + seek table). */
 case class ZstdSeekPack(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
   override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(BinaryType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"zstd_seek_pack expects array<binary> input, got $other")
-  }
+  override def inputTypes = Seq(ArrayType(BinaryType))
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
     val chunks = new Array[Array[Byte]](arr.numElements())

@@ -1,12 +1,13 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.StringType
 
 import graft.avro.{AvroOcf, FromAvroDatum, FromAvroOcf, ToAvroDatum, ToAvroOcf}
+import graft.avro.functions.{intLiteral, sqlFunctions}
 
 /** Optimizer rule: `from_avro_ocf(to_avro_ocf(x, s), s)` -> `x`.
   *
@@ -80,65 +81,31 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => CodecRoundTripElimination)
     e.injectOptimizerRule(_ => AsofFilterPushdown)
     e.injectPlannerStrategy(_ => AsofJoinStrategy)
-    def litStr(x: org.apache.spark.sql.catalyst.expressions.Expression): String = x match {
-      case Literal(s, StringType) if s != null => s.toString
-      case other => throw new IllegalArgumentException(s"schema must be a string literal: $other")
-    }
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("from_avro_ocf"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[FromAvroOcf].getName, "from_avro_ocf"),
-      (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FromAvroOcf(es.head, litStr(es(1)))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("to_avro_ocf"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[ToAvroOcf].getName, "to_avro_ocf"),
-      (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ToAvroOcf(es.head, litStr(es(1)))))
-    def litInt(x: org.apache.spark.sql.catalyst.expressions.Expression): Int = x match {
-      case Literal(i: Int, org.apache.spark.sql.types.IntegerType) => i
-      case other => throw new IllegalArgumentException(s"expected int literal: $other")
-    }
+    def inject(name: String, cls: Class[_], build: Seq[Expression] => Expression): Unit =
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    sqlFunctions.foreach { case (name, cls, build) => inject(name, cls, build) }
     // the UDTF of the extension trio — usable as a SQL generator:
     // SELECT doc_id, c.* FROM docs LATERAL VIEW chunk_document(tokens, 64, 16) c
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("chunk_document"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.ChunkDocument].getName, "chunk_document"),
-      (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.ChunkDocument(es.head, litInt(es(1)), litInt(es(2)))))
+    inject("chunk_document", classOf[graft.functions.ChunkDocument], es =>
+      graft.functions.ChunkDocument(es.head, intLiteral(es(1)), intLiteral(es(2))))
 
     // the ingest-kernel family as SQL functions, so the pure-SQL user
     // surface (registerTables + spark.sql) reaches every blob/text
     // kernel the Column API has — same Expression classes, no wrappers
-    import org.apache.spark.sql.catalyst.expressions.Expression
+    def nary(name: String, cls: Class[_], n: Int)(f: Seq[Expression] => Expression): Unit =
+      inject(name, cls, es => {
+        require(es.length == n,
+          s"$name takes $n argument${if (n == 1) "" else "s"}, got ${es.length}")
+        f(es)
+      })
     def unary(name: String, cls: Class[_], f: Expression => Expression): Unit =
-      e.injectFunction((
-        new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(cls.getName, name),
-        (es: Seq[Expression]) => {
-          require(es.length == 1, s"$name takes 1 argument, got ${es.length}")
-          f(es.head)
-        }))
+      nary(name, cls, 1)(es => f(es(0)))
     def binary(name: String, cls: Class[_],
         f: (Expression, Expression) => Expression): Unit =
-      e.injectFunction((
-        new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(cls.getName, name),
-        (es: Seq[Expression]) => {
-          require(es.length == 2, s"$name takes 2 arguments, got ${es.length}")
-          f(es(0), es(1))
-        }))
+      nary(name, cls, 2)(es => f(es(0), es(1)))
     def ternary(name: String, cls: Class[_],
         f: (Expression, Expression, Expression) => Expression): Unit =
-      e.injectFunction((
-        new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(cls.getName, name),
-        (es: Seq[Expression]) => {
-          require(es.length == 3, s"$name takes 3 arguments, got ${es.length}")
-          f(es(0), es(1), es(2))
-        }))
+      nary(name, cls, 3)(es => f(es(0), es(1), es(2)))
     import graft.functions._
     unary("blob_kind", classOf[BlobKindOf], BlobKindOf)
     unary("charset_sniff", classOf[CharsetSniff], CharsetSniff)
@@ -178,14 +145,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     unary("vp8l_stats", classOf[Vp8lStats], Vp8lStats)
     unary("vp8_stats", classOf[Vp8StatsExpr], Vp8StatsExpr)
     unary("webp_anim_frames", classOf[WebpAnimFrames], WebpAnimFrames)
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("synth_vp8"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[SynthVp8].getName, "synth_vp8"),
-      (es: Seq[Expression]) => {
-        require(es.length == 4, s"synth_vp8 takes 4 arguments, got ${es.length}")
-        SynthVp8(es(0), es(1), es(2), es(3))
-      }))
+    nary("synth_vp8", classOf[SynthVp8], 4)(es => SynthVp8(es(0), es(1), es(2), es(3)))
     binary("blob_kind_hinted", classOf[BlobKindHinted], BlobKindHinted)
     unary("qoi_stats", classOf[QoiStats], QoiStats)
     unary("tiff_stats", classOf[TiffStats], TiffStats)

@@ -428,4 +428,112 @@ class AvroCodecSpec extends SparkSpec {
     assert(got.head.getFloat(0) === 9.5f)
     assert(got.head.getInt(1) === 1 + 3 + 1 + 4 + 4) // varint+id, varint+product, float
   }
+
+  // -- bounded decode: a corrupt length claim must not become an allocation
+
+  /** Strings, bytes, an array and a map: one field of each length-carrying kind. */
+  private val wideJson =
+    """{"type":"record","name":"Wide","fields":[
+      |{"name":"s","type":"string"},{"name":"b","type":"bytes"},
+      |{"name":"a","type":{"type":"array","items":"long"}},
+      |{"name":"m","type":{"type":"map","values":"long"}}]}""".stripMargin.replace("\n", "")
+
+  /** Avro zigzag varints for `ns`, then `tail`. */
+  private def varints(ns: Long*)(tail: Array[Byte] = Array.emptyByteArray): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val enc = org.apache.avro.io.EncoderFactory.get().directBinaryEncoder(out, null)
+    ns.foreach(n => enc.writeLong(n))
+    enc.flush()
+    out.write(tail)
+    out.toByteArray
+  }
+
+  private def ocfFrame(json: String, datum: Array[Byte]): Array[Byte] =
+    AvroOcf.headerAndSync(new Schema.Parser().parse(json))._1 ++
+      varints(1L, datum.length.toLong)(datum)
+
+  private def confluentFrame(id: Int, datum: Array[Byte]): Array[Byte] =
+    Array[Byte](0, (id >>> 24).toByte, (id >>> 16).toByte, (id >>> 8).toByte, id.toByte) ++ datum
+
+  /** The three decoding expressions over `json`, as functions of the payload. */
+  private def decoders(json: String): Seq[(String, Array[Byte] => Any)] = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.avro.{FromAvroConfluent, FromAvroDatum, FromAvroOcf, StaticSchemaRegistry}
+    val registry = StaticSchemaRegistry(Map(3 -> json))
+    Seq(
+      "ocf" -> (b => FromAvroOcf(Literal(b), json).eval(null)),
+      "datum" -> (b => FromAvroDatum(Literal(b), json).eval(null)),
+      "confluent" -> (b => FromAvroConfluent(Literal(b), json, registry).eval(null)))
+  }
+
+  private def allocatedBytes(): Long =
+    java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean].getCurrentThreadAllocatedBytes
+
+  test("huge length claims decode to null without allocating the claimed size") {
+    val tail = "abc".getBytes("UTF-8")
+    val huge = 200L * 1000 * 1000
+    val many = 50L * 1000 * 1000
+    val crafted = Seq(
+      (Schemas.orderAvroJson, "order string", varints(huge)(tail)),
+      (wideJson, "string", varints(huge)(tail)),
+      (wideJson, "bytes", varints(0L, huge)(tail)),
+      (wideJson, "array count", varints(0L, 0L, many)(tail)),
+      (wideJson, "map count", varints(0L, 0L, 0L, many)(tail)))
+    val valid = varints(0L, 0L, 0L, 0L)()
+    for ((json, what, datum) <- crafted) {
+      val ds = decoders(json).toMap
+      val frames = Seq("ocf" -> ocfFrame(json, datum), "datum" -> datum,
+        "confluent" -> confluentFrame(3, datum))
+      for ((path, frame) <- frames) {
+        val decode = ds(path)
+        // warm the expression's lazy schema state, then measure one decode
+        if (json == wideJson) {
+          val ok = path match {
+            case "ocf" => ocfFrame(json, valid)
+            case "datum" => valid
+            case _ => confluentFrame(3, valid)
+          }
+          assert(decode(ok) != null, s"$path: the valid wide datum must decode")
+        } else decode(frame)
+        val before = allocatedBytes()
+        val got = decode(frame)
+        val allocated = allocatedBytes() - before
+        assert(got === null, s"$path / $what")
+        assert(allocated < (1L << 20), s"$path / $what allocated $allocated bytes")
+      }
+    }
+  }
+
+  test("fuzz: random blobs, truncations and bit flips never throw out of the decoders") {
+    val rnd = new scala.util.Random(20261018L)
+    val order = org.apache.spark.sql.catalyst.InternalRow(
+      org.apache.spark.unsafe.types.UTF8String.fromString("fz-1"),
+      org.apache.spark.unsafe.types.UTF8String.fromString("Fuzzed"), 3.25f)
+    val datum = AvroOcf.encodeDatumRow(order, Schemas.order, schema)
+    val valid = Seq(AvroOcf.encodeRow(order, Schemas.order, schema),
+      confluentFrame(3, datum), datum)
+    val header = AvroOcf.headerAndSync(schema)._1
+    val blobs = Seq.fill(2000) {
+      val b = new Array[Byte](rnd.nextInt(64)); rnd.nextBytes(b)
+      rnd.nextInt(3) match { // random tails behind each framing's prefix
+        case 0 => header ++ b
+        case 1 => Array[Byte](0, 0, 0, 0, 3) ++ b
+        case _ => b
+      }
+    }
+    val truncations = valid.flatMap(v => (0 until v.length).map(v.take))
+    val flips = valid.flatMap(v => (0 until v.length * 8).map { bit =>
+      val c = v.clone(); c(bit / 8) = (c(bit / 8) ^ (1 << (bit % 8))).toByte; c
+    })
+    val ds = decoders(Schemas.orderAvroJson)
+    var decoded = 0
+    for (input <- blobs ++ truncations ++ flips; (path, decode) <- ds) {
+      val got = try decode(input) catch {
+        case t: Throwable => fail(s"$path threw $t on ${input.mkString(",")}")
+      }
+      if (got != null) decoded += 1
+    }
+    assert(decoded > 0) // some flips land in payload bytes and still decode
+  }
 }

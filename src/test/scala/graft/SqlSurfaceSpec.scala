@@ -98,6 +98,86 @@ class SqlSurfaceSpec extends AnyFunSuite {
       "SELECT ogg_meta(cast('OggS nope' as binary)) IS NULL") === true)
   }
 
+  private val json = graft.model.Schemas.orderAvroJson
+  private val order =
+    "named_struct('orderId', 'o-1', 'product', 'Widget', 'price', cast(4.5 as float))"
+
+  test("all eight Avro functions resolve and evaluate through spark.sql") {
+    assert(one[String](s"SELECT avro_framing(to_avro_ocf($order, '$json'))") === "ocf")
+    assert(one[String](
+      s"SELECT from_avro_ocf(to_avro_ocf($order, '$json'), '$json').product") === "Widget")
+    assert(one[String](
+      s"SELECT from_avro_datum(to_avro_datum($order, '$json'), '$json').orderId") === "o-1")
+    assert(one[Float](s"SELECT from_avro_confluent(to_avro_confluent($order, '$json', 7), " +
+      s"'$json', 7).price") === 4.5f)
+    assert(one[String](
+      s"SELECT avro_framing(to_avro_confluent($order, '$json', 7))") === "confluent")
+    assert(one[Boolean](s"SELECT avro_can_read('$json', '$json')") === true)
+    // an unknown schema id decodes to null, not an error
+    assert(one[Any](s"SELECT from_avro_confluent(to_avro_confluent($order, '$json', 7), " +
+      s"'$json', 8)") === null)
+  }
+
+  /** Every SQL function the extension registers, with the arguments
+    * after the first. */
+  private val calls: Seq[(String, String)] = Seq(
+    "from_avro_ocf" -> s", '$json'", "to_avro_ocf" -> s", '$json'",
+    "from_avro_datum" -> s", '$json'", "to_avro_datum" -> s", '$json'",
+    "from_avro_confluent" -> s", '$json', 1", "to_avro_confluent" -> s", '$json', 1",
+    "avro_can_read" -> s", '$json'", "avro_framing" -> "",
+    "chunk_document" -> ", 4, 1",
+    "blob_kind" -> "", "blob_kind_hinted" -> ", 'br'", "charset_sniff" -> "",
+    "utf8_stats" -> "", "utf8_sanitize" -> "", "html_entity_decode" -> "",
+    "qp_decode" -> "", "idna_decode" -> "", "url_parse" -> "",
+    "percent_decode" -> ", false", "robots_decision" -> ", 'bot', '/x'",
+    "geohash" -> ", 10407440L, 5",
+    "snappy_compress" -> "", "snappy_decompress" -> "", "proto_stats" -> "",
+    "zstd_frame_meta" -> "", "zstd_decompress" -> "", "zstd_compress" -> ", true",
+    "zstd_compress_dict" -> ", cast('d' as binary)",
+    "zstd_decompress_dict" -> ", cast('d' as binary)",
+    "zstd_seek_pack" -> "", "zstd_seek_meta" -> "", "zstd_seek_read" -> ", 0",
+    "brotli_meta" -> "", "brotli_wrap" -> "", "brotli_unwrap" -> "",
+    "mp4_meta" -> "", "mp4_tracks" -> "", "parquet_footer" -> "", "mp3_meta" -> "",
+    "ogg_meta" -> "", "synth_ogg_crcbad" -> "", "flac_meta" -> "",
+    "synth_flac" -> ", false", "webm_meta" -> "", "synth_webm" -> ", false",
+    "webp_meta" -> "", "vp8l_stats" -> "", "vp8_stats" -> "", "webp_anim_frames" -> "",
+    "synth_vp8" -> ", 16, 16, 0", "qoi_stats" -> "", "tiff_stats" -> "",
+    "ico_stats" -> "", "exif_meta" -> "", "adpcm_stats" -> "")
+
+  test("the call table covers every SQL function the extension registers") {
+    val registry = sql.sessionState.functionRegistry
+    val graftFns = registry.listFunction().map(_.funcName).filter(name =>
+      registry.lookupFunction(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(name)).exists(
+        _.getClassName.startsWith("graft.")))
+    assert(graftFns.toSet === calls.map(_._1).toSet)
+  }
+
+  test("a bare NULL first argument resolves to a typed null and evaluates") {
+    for ((fn, rest) <- calls) {
+      val df = sql.sql(s"SELECT $fn(NULL$rest)")
+      val cls = sql.sessionState.functionRegistry
+        .lookupFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(fn)).get.getClassName
+      val resolved = df.queryExecution.analyzed.flatMap(_.expressions)
+        .flatMap(_.collect { case e if e.getClass.getName == cls => e })
+      assert(resolved.size === 1, fn)
+      assert(resolved.head.isInstanceOf[
+        org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes], fn)
+      assert(resolved.head.children.head.dataType !=
+        org.apache.spark.sql.types.NullType, fn)
+      df.collect()
+    }
+  }
+
+  test("a wrong-typed first argument fails analysis with DATATYPE_MISMATCH") {
+    for ((fn, rest) <- calls) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        sql.sql(s"SELECT $fn(array(1)$rest)").collect())
+      assert(e.getMessage.contains("DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE"),
+        s"$fn: ${e.getMessage}")
+    }
+  }
+
   test("the asof planner strategy and codec-elimination rule ride the " +
     "same extension class (smoke: session plans a query)") {
     // a plain SQL round through the new session proves the injected
